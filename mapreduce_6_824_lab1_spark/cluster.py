@@ -112,8 +112,8 @@ STREAMING_CLUSTER_CONF: dict[str, str] = {
     "spark.sql.streaming.noDataMicroBatches.enabled": "true",
     # Session-window map-side pre-merge: sorts each input partition by
     # (key, start) and merges overlapping sessions BEFORE the stateful
-    # shuffle. Measured r14 (tools/ab_session_local_merge.py, identity-
-    # verified, deterministic rate-micro-batch batches, interleaved both
+    # shuffle. Measured r14 (SCALING_r14.md, identity-verified,
+    # deterministic rate-micro-batch batches, interleaved both
     # orders): on local[32] the extra sort LOSES ~4-10% per batch because
     # the in-memory shuffle it saves is nearly free — so the engine's
     # local default stays off. On a network-shuffle cluster the same

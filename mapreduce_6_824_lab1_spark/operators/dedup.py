@@ -21,7 +21,6 @@ cluster is below it — threshold pinned at 0.6.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -193,7 +192,7 @@ def jaccard_pairs(
     # t (the dropped pairs cannot reach the final filter). The 1e-9
     # slack keeps the prune strictly conservative under double rounding
     # (ulp ~1e-16 at these magnitudes); A/B + identity:
-    # tools/ab_jaccard_lenfilter.py.
+    # OPTIMIZATION_r14.md.
     pairs = (
         postings.select(
             F.explode(
@@ -574,7 +573,6 @@ def connected_components(
     max_rounds: int = 50,
     loop_partitions: int | None = None,
     local_contraction: bool = True,
-    contraction: str | None = None,
 ) -> DataFrame:
     """Min-label propagation CC over an undirected pair list (doc_a, doc_b).
 
@@ -660,52 +658,23 @@ def connected_components(
         # Sizing stays on n_pairs (an upper bound on contracted edges);
         # AQE coalesces the slack.
         #
-        # `contraction` selects the pre-pass shape (round-12 verdict ask
-        # #5 — cross-partition locality ahead of round 1). Default comes
-        # from SPARK_GRAFT_CC_CONTRACTION (the A/B switch used by
-        # tools/ab_cc_locality.py) falling back to the shipped mode:
-        # - "off":   no pre-pass (the contract-invariant tests use this
-        #            via local_contraction=False)
-        # - "local": one contraction on the existing layout (shipped
-        #            r12; zero added shuffle)
-        # - "two_level": SHIPPED DEFAULT since r13 — contract, then
-        #            REPARTITION the already-shrunk star edges by doc_a
-        #            and contract again: a node whose edges were
-        #            scattered across upstream partitions carries one
-        #            star per partition; grouping stars by node lets a
-        #            second local union-find merge their targets,
-        #            swallowing the cross-partition chains the loop
-        #            would otherwise spend rounds on. The added exchange
-        #            moves star edges (<= one row per distinct node per
-        #            partition), NOT the corpus-scale pair list — and
-        #            what it buys is distributed ROUNDS, each a full
-        #            cluster barrier at 1000 executors. Measured
-        #            (SCALING_r13.md, 6-run interleaved both orders,
-        #            outputs identical): similarity_knn_clusters 5 -> 1
-        #            CC rounds, median 6.96 -> 4.90 s at sf0.1;
-        #            dedup_clusters (already 1-round under "local")
-        #            within noise.
-        # - "range": the verdict's literal suggestion — co-locate pairs
-        #            by min endpoint BEFORE contracting (hash, not
-        #            range: ids carry no component locality, so range
-        #            ordering adds only a sampling job; hashing the min
-        #            already lands every edge sharing its low endpoint
-        #            together). This one DOES exchange the full pair
-        #            list; measured slower than two_level (3 rounds,
-        #            5.63 s median on the kNN key) — kept as an A/B arm.
-        if contraction is None:
-            # The env var is an A/B switch, not a policy override: it is
-            # consulted ONLY when the caller left both knobs at their
-            # defaults. A caller that asked for no pre-pass
-            # (local_contraction=False) gets a hard "off" even if a
-            # killed A/B tool leaked SPARK_GRAFT_CC_CONTRACTION into the
-            # environment (ADVICE r13).
-            if local_contraction:
-                contraction = os.environ.get(
-                    "SPARK_GRAFT_CC_CONTRACTION", "two_level"
-                )
-            else:
-                contraction = "off"
+        # local_contraction=True (shipped since r13) runs it two-level:
+        # contract, then REPARTITION the already-shrunk star edges by
+        # doc_a and contract again. A node whose edges were scattered
+        # across upstream partitions carries one star per partition;
+        # grouping stars by node lets a second local union-find merge
+        # their targets, swallowing the cross-partition chains the loop
+        # would otherwise spend rounds on. The added exchange moves star
+        # edges (<= one row per distinct node per partition), NOT the
+        # corpus-scale pair list — and what it buys is distributed
+        # ROUNDS, each a full cluster barrier at 1000 executors. Measured
+        # against a single contraction on the existing layout and against
+        # hashing pairs by min endpoint first (SCALING_r13.md, 6-run
+        # interleaved both orders, outputs identical):
+        # similarity_knn_clusters 1 CC round vs 5 and 3.
+        # local_contraction=False skips the pre-pass (the reference the
+        # contract-invariant tests compare against).
+        #
         # Contraction task-count bound (round 14, guide §4: the Python
         # lane's cost here is per-TASK, not per-row — measured 0.3 s of
         # worker CPU per task at ~190 rows/task, 9 ms of which is the
@@ -731,21 +700,13 @@ def connected_components(
             if contract_parts < n_layout
             else pairs
         )
-        if contraction == "local":
-            loop_pairs = _contract_partitions(cpairs)
-        elif contraction == "two_level":
+        if local_contraction:
             loop_pairs = _contract_partitions(
                 _contract_partitions(cpairs).repartition(
                     loop_partitions, "doc_a"
                 )
             )
-        elif contraction == "range":
-            loop_pairs = _contract_partitions(
-                pairs.repartition(
-                    loop_partitions, F.least("doc_a", "doc_b")
-                )
-            )
-        else:  # "off"
+        else:
             loop_pairs = pairs
         with scoped_conf(
             spark, {"spark.sql.shuffle.partitions": str(loop_partitions)}
@@ -784,11 +745,6 @@ def _fingerprint(labels: DataFrame):
     via ``DataFrame.observe`` — see ``_cc_loop``)."""
     row = labels.agg(*_fingerprint_aggs()).collect()[0]
     return _fingerprint_guard(row["s"], row["n"])
-
-
-#: rounds taken by the most recent _cc_loop call — A/B instrumentation
-#: (SCALING_r11/r12 round counts), never read by operator logic
-_LAST_CC_ROUNDS: int = 0
 
 
 def _cc_loop(
@@ -849,7 +805,7 @@ def _cc_loop(
     # metrics are exactly-once per successful job (task retries do not
     # double-count), and the overflow/empty disambiguation guard is
     # unchanged (_fingerprint_guard). A/B + identity:
-    # tools/ab_cc_observe.py.
+    # OPTIMIZATION_r15.md, evidence/r15/.
     seed_obs = Observation()
     labels = (
         seeded.join(seed_reps, seeded["label"] == seed_reps["rep_id"])
@@ -910,8 +866,6 @@ def _cc_loop(
                 round_obs.get["s"], round_obs.get["n"]
             )
             labels = updated
-            global _LAST_CC_ROUNDS  # noqa: PLW0603 — instrumentation only
-            _LAST_CC_ROUNDS = round_no
             if cur_sum == prev_sum:
                 converged = True
                 break

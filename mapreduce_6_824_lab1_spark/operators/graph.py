@@ -418,10 +418,10 @@ def _bfs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-checkpointed each hop: every leaf is already materialized, so
     # the union's lineage is flat (no recompute, no growth). Each hop
     # pays ONE eager job: round 14 dropped the visited re-checkpoint
-    # (3 -> 2 jobs/hop; tools/ab_bfs_rounds.py, interleaved A/B medians
+    # (3 -> 2 jobs/hop; OPTIMIZATION_r14.md, interleaved A/B medians
     # -9%/-23%), and round 15 folded the empty-frontier probe into the
     # checkpoint job itself as an observed row count (2 -> 1;
-    # tools/ab_bfs_observe.py — CollectMetrics is exactly-once per job,
+    # OPTIMIZATION_r15.md — CollectMetrics is exactly-once per job,
     # and count == 0 is precisely what isEmpty() asked). At cluster
     # scale each removed job is a full barrier per BFS round.
     hop_frames = [hop0]

@@ -3,8 +3,8 @@
 Spark 4.1's ``PythonWorkerFactory`` reaps idle pooled workers after a
 HARD-CODED one minute (``IDLE_WORKER_TIMEOUT_NS = MINUTES.toNanos(1)``
 in the factory's static initializer — a constant, not a conf; verified
-against this build's bytecode and empirically via
-``tools/probe_worker_lifetime.py``: a 32-worker pool sits intact for
+against this build's bytecode and empirically (SCALING_r12.md): a
+32-worker pool sits intact for
 60 s idle, then collapses to daemon-only within the next poll). Any
 Python-lane stage that starts >60 s after the previous one therefore
 pays a full pool rebuild, and the dominant rebuild cost is each fresh
@@ -33,9 +33,11 @@ whole fleet — preloading moves that cost to one import per executor
 process lifetime.
 
 The tuned session factory (:mod:`.session`) enables this module unless
-``SPARK_GRAFT_NO_PRELOAD_DAEMON`` is set (the A/B switch used by
-``tools/ab_worker_respawn.py``). The driver's own vanilla sessions are
-unaffected — this is an engine optimization, not a correctness path.
+``SPARK_GRAFT_NO_PRELOAD_DAEMON`` is set: the fallback to stock
+``pyspark.daemon`` for deployments where the package is not importable
+at worker launch (see :func:`.cluster.cluster_conf`). The driver's own
+vanilla sessions are unaffected — this is an engine optimization, not a
+correctness path.
 """
 
 from __future__ import annotations

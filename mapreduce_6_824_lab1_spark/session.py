@@ -10,6 +10,7 @@ re-applied per-query in :mod:`catalog` via runtime conf.
 from __future__ import annotations
 
 import os
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -33,6 +34,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # (ns div 1000 == DuckDB's ns→µs truncation, keeping oracle parity).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = "2000"
 
 
 def get_spark(
@@ -59,15 +63,12 @@ def get_spark(
         # minutes ago the entry is evicted and Janino + the JVM JIT pay
         # again (measured round 15: a WARM re-run of similarity_knn_clusters
         # recompiled 27-69 sources whose text was bit-identical to the
-        # first run's — tools/probe_codegen_cache.py; census jit_ms 6-10 s
+        # first run's — OPTIMIZATION_r15.md; census jit_ms 6-10 s
         # inside that one bracket). 2000 entries holds a whole session's
         # working set; the same default-100 eviction happens per executor
         # JVM on a real cluster, where executors are long-lived and the
-        # benefit compounds. Scale-independent; override via env to A/B.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
+        # benefit compounds. Scale-independent.
+        .config(CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES)
     )
     if not os.environ.get("SPARK_GRAFT_NO_PRELOAD_DAEMON"):
         # the daemon resolves the module via PYTHONPATH/cwd, not the
@@ -94,7 +95,19 @@ def get_spark(
         )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # getOrCreate on a JVM that already runs a session keeps that
+    # session's static confs and only logs it; make the gap visible.
+    got = spark.conf.get(CODEGEN_CACHE_CONF)
+    if got != CODEGEN_CACHE_ENTRIES:
+        warnings.warn(
+            f"static conf {CODEGEN_CACHE_CONF} is {got!r}, not the "
+            f"requested {CODEGEN_CACHE_ENTRIES!r}: the SparkSession "
+            "already running in this JVM kept its own value",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return spark
 
 
 @contextmanager

@@ -477,11 +477,10 @@ class _TypeCountProcessor(_BootstrappedProcessor):
 
     Reads are per-entry POINT OPS (``getValue`` per touched type — the
     canonical MapState exercise this key exists to demonstrate); the
-    measured alternative is :class:`_TypeCountIterProcessor`, which
-    replaces the reads with one ``iterator()`` scan. A/B-measured round
-    9 (tools/ab_mapstate_iterator.py, SCALING_r09.md): at sf1 WARM the
-    iterator read is a ~7.5% wall-clock saving (medians 39.1 vs
-    42.2 s over 3 alternating reps, identical row-level results) —
+    measured alternative replaces the reads with one ``iterator()``
+    scan. A/B-measured round 9 (evidence/archive/SCALING_r09.md): at
+    sf1 WARM the iterator read is a ~7.5% wall-clock saving (medians
+    39.1 vs 42.2 s over 3 alternating reps, identical row-level results) —
     round-trip COUNT is roughly halved (the r08 estimate), but at sf1
     wall-clock is dominated by Arrow/RocksDB/staging, so the traffic
     cut doesn't convert 1:1; cold/short sessions show the large effect
@@ -494,16 +493,6 @@ class _TypeCountProcessor(_BootstrappedProcessor):
         self._counts = handle.getMapState(
             "counts", "event_type string", "cnt long, tot long"
         )
-
-    def _prior(self, touched: list[str]) -> dict[str, tuple[int, int]]:
-        """Point-read each touched entry (one protobuf round-trip per
-        type) — the read path the A/B variant overrides."""
-        out = {}
-        for et in touched:
-            val = self._counts.getValue((et,))
-            if val is not None:
-                out[et] = (int(val[0]), int(val[1]))
-        return out
 
     def _accumulate(self, pdf: pd.DataFrame) -> list[tuple[str, int, int]]:
         """Fold one batch's rows into MapState and return the touched
@@ -522,10 +511,11 @@ class _TypeCountProcessor(_BootstrappedProcessor):
             .groupby("et")["c"]
             .agg(["count", "sum"])
         )
-        prior = self._prior(list(agg.index))
         out = []
         for et, row in agg.iterrows():
-            n0, t0 = prior.get(et, (0, 0))
+            # point read: one protobuf round-trip per touched type
+            val = self._counts.getValue((et,))
+            n0, t0 = (0, 0) if val is None else (int(val[0]), int(val[1]))
             n, t = n0 + int(row["count"]), t0 + int(row["sum"])
             self._counts.updateValue((et,), (n, t))
             out.append((et, n, t))
@@ -535,23 +525,6 @@ class _TypeCountProcessor(_BootstrappedProcessor):
         (user_id,) = key
         pdf = pd.concat(list(rows), ignore_index=True)
         yield _type_counts_frame(user_id, self._accumulate(pdf))
-
-
-class _TypeCountIterProcessor(_TypeCountProcessor):
-    """The read-side A/B lever (round-8 verdict ask #5): identical
-    semantics, but prior values come from ONE ``iterator()`` scan of the
-    user's map instead of one ``getValue`` round-trip per touched type.
-    Correct because the scan is a superset of the touched entries —
-    untouched types just ride along in the local dict. NOT registered:
-    the registered key keeps the point-op form (it exists to exercise
-    the MapState point primitives); this class exists so
-    tools/ab_mapstate_iterator.py can measure the difference."""
-
-    def _prior(self, touched: list[str]) -> dict[str, tuple[int, int]]:
-        return {
-            k[0]: (int(v[0]), int(v[1]))
-            for k, v in self._counts.iterator()
-        }
 
 
 @query("stream_type_counts_tws", oracle=TYPE_COUNTS_ORACLE)
@@ -584,16 +557,12 @@ def stream_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     RocksDB; per batch the protobuf traffic is touched-entries, the
     file sink is the durable changelog a KV upsert would consume.
     """
-    return _run_type_counts(spark, sf_dir, _TypeCountProcessor())
+    return _run_type_counts(spark, sf_dir)
 
 
-def _run_type_counts(
-    spark: SparkSession, sf_dir: str, processor: StatefulProcessor
-) -> DataFrame:
-    """Staged-slice harness + downstream max-struct fold shared by the
-    registered point-op key and the A/B iterator variant
-    (tools/ab_mapstate_iterator.py) — one harness, two read paths, so
-    the A/B measures exactly the state-read difference."""
+def _run_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Staged-slice harness + downstream max-struct fold around
+    :class:`_TypeCountProcessor`."""
     from mapreduce_6_824_lab1_spark.catalog import load_table
     from mapreduce_6_824_lab1_spark.session import scoped_conf
 
@@ -618,7 +587,7 @@ def _run_type_counts(
             .parquet(scratch)
         )
         counts = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=processor,
+            statefulProcessor=_TypeCountProcessor(),
             outputStructType=_TYPE_OUT_SCHEMA,
             outputMode="append",
             timeMode="none",

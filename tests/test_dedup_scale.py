@@ -118,21 +118,6 @@ def test_connected_components_raises_without_convergence(spark):
         connected_components(pairs, max_rounds=2, local_contraction=False)
 
 
-def test_leaked_env_var_cannot_override_explicit_off(spark, monkeypatch):
-    """ADVICE r13: SPARK_GRAFT_CC_CONTRACTION is an A/B switch consulted
-    only when the caller left the knobs at defaults. A leaked env var
-    (an A/B tool killed between set and pop) must NOT turn an explicit
-    local_contraction=False into two_level — the two_level pre-pass
-    flattens the 999-path below, which would silently convert this raise
-    into a converge."""
-    monkeypatch.setenv("SPARK_GRAFT_CC_CONTRACTION", "two_level")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(999)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_rounds=2, local_contraction=False)
-
-
 def test_connected_components_round_count_pinned(spark):
     """Guard the round-11 seeding win: a 64-node path (worst case per
     node count — one long chain) must converge within 6 rounds under
@@ -299,15 +284,17 @@ def test_dedup_embedding_semantics(spark):
     assert all((r.kept_id, r.dup_id) in exact for r in got)
 
 
-@pytest.mark.parametrize("mode", ["off", "local", "two_level", "range"])
-def test_connected_components_contraction_modes_agree(spark, mode):
-    """Round-13 locality A/B (verdict ask #5): every contraction variant
-    — no pre-pass, the shipped partition-local contraction, the
-    two-level star-merge (contract, repartition stars by node, contract
-    again), and the min-endpoint pre-repartition — must reach the SAME
-    fixpoint. Graph chosen so components straddle partitions: two long
-    interleaved paths (even ids / odd ids) plus a self-loop singleton,
-    written across 8 partitions so no partition sees a whole
+@pytest.mark.parametrize(
+    "local_contraction", [False, True], ids=["off", "two_level"]
+)
+def test_connected_components_contraction_modes_agree(
+    spark, local_contraction
+):
+    """No pre-pass and the shipped two-level star-merge pre-pass
+    (contract, repartition stars by node, contract again) must reach the
+    SAME fixpoint. Graph chosen so components straddle partitions: two
+    long interleaved paths (even ids / odd ids) plus a self-loop
+    singleton, written across 8 partitions so no partition sees a whole
     component."""
     edges = [(i, i + 2) for i in range(0, 60, 2)]  # even path 0..60
     edges += [(i, i + 2) for i in range(1, 61, 2)]  # odd path 1..61
@@ -317,7 +304,9 @@ def test_connected_components_contraction_modes_agree(spark, mode):
     ).repartition(8)
     out = {
         (r.doc_id, r.cluster_rep)
-        for r in connected_components(pairs, contraction=mode).collect()
+        for r in connected_components(
+            pairs, local_contraction=local_contraction
+        ).collect()
     }
     want = {(i, 0) for i in range(0, 62, 2)}
     want |= {(i, 1) for i in range(1, 62, 2)}
@@ -330,7 +319,7 @@ def test_cc_loop_fingerprint_folds_into_checkpoint_job(spark, monkeypatch):
     inside each round's checkpoint job as an observed metric — _cc_loop
     must never fall back to the standalone _fingerprint action (one extra
     job, i.e. one extra cluster barrier, per round; measured 31 -> 27
-    jobs on the sf0.1 kNN pipeline, tools/ab_cc_observe.py). The
+    jobs on the sf0.1 kNN pipeline, OPTIMIZATION_r15.md). The
     monkeypatch makes any such call explode; convergence and labels must
     still be exact."""
     from mapreduce_6_824_lab1_spark.operators import dedup

@@ -1,9 +1,8 @@
 """Fork-warmed Python worker daemon (session.py + preload_daemon.py).
 
 Spark 4.1 reaps idle pooled workers after a hard-coded minute
-(PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS — measured live in
-tools/probe_worker_lifetime.py: 33 → 1 processes between t=60 s and
-t=70 s idle), so every Arrow stage after a JVM-only gap rebuilds the
+(PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS — measured live, see
+SCALING_r12.md: 33 → 1 processes between t=60 s and t=70 s idle), so every Arrow stage after a JVM-only gap rebuilds the
 pool. The tuned session routes worker forking through
 ``preload_daemon``, which imports numpy/pandas/pyarrow (and, via its
 ``-m`` parent-package import, the engine itself) once in the

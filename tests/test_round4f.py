@@ -157,7 +157,7 @@ def test_bfs_frontier_equals_recursive_cte(spark):
 
 def test_bfs_loop_never_calls_isempty(spark, monkeypatch):
     """Round 15: the empty-frontier early-exit test rides the hop's
-    checkpoint job as an observed row count (tools/ab_bfs_observe.py:
+    checkpoint job as an observed row count (OPTIMIZATION_r15.md:
     29 -> 25 jobs at sf0.1, one per hop) — the loop must never fall back
     to a standalone isEmpty() probe job. The monkeypatch makes any such
     call explode; the BFS result must still be the exact hop table."""

@@ -1,6 +1,8 @@
 """Capture `.explain("formatted")` for benched query keys into plans/<round>/.
 
-The round directory defaults to r15 (override with SPARK_GRAFT_PLANS_ROUND).
+The round directory defaults to the round in progress: one past the latest
+``CORRECTNESS_r<N>.json`` on disk, the correctness record of a closed round
+(override with SPARK_GRAFT_PLANS_ROUND).
 
 Round-14 optimization deliverable: the judge cannot run Spark, so every
 plan claim in OPTIMIZATION_r14.md must be checkable against committed
@@ -9,7 +11,7 @@ explain output. Usage:
     python tools/capture_plans.py before            # all benched keys
     python tools/capture_plans.py after key1 key2   # just the keys touched
 
-Writes plans/r14/<key>_<tag>.txt. Driver-only work (planning, plus the
+Writes plans/<round>/<key>_<tag>.txt. Driver-only work (planning, plus the
 handful of metadata-grade jobs some builders run at construction time,
 e.g. similarity_knn_graph's corpus count) — nothing is executed or
 materialized, so this is safe to run alongside other sessions.
@@ -20,7 +22,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
+from pathlib import Path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -35,11 +39,25 @@ def benched_keys() -> list[str]:
     return list(bench.HEADLINE) + list(bench.EXTENDED)
 
 
+def default_round(repo: str = REPO) -> str:
+    """``r<N+1>`` where N is the highest CORRECTNESS_r<N>.json round in
+    ``repo`` (r1 when there is none): captures land in the round being
+    worked on, never in a closed round's directory."""
+    rounds = [
+        int(m.group(1))
+        for p in Path(repo).glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)", p.stem))
+    ]
+    return f"r{max(rounds, default=0) + 1}"
+
+
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     keys = sys.argv[2:] or benched_keys()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15"))
+    out_dir = os.path.join(
+        REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND") or default_round()
+    )
     os.makedirs(out_dir, exist_ok=True)
 
     sys.path.insert(0, REPO)

@@ -20,9 +20,9 @@ evidentiary strength:
    sole basis for ENGINE-SUSPECT).
 
 If none of the three signals fires, the verdict is ENGINE-SUSPECT:
-bisect with tools/ab isolation runs before touching any floor. The tool
-never edits BENCH_FLOOR.json — ratchets remain the exclusive business
-of tools/floor_medians.py.
+bisect with isolated, interleaved A/B runs before touching any floor.
+The tool never edits BENCH_FLOOR.json — ratchets remain the exclusive
+business of tools/floor_medians.py.
 
 Usage: python tools/trip_rule.py <session-label> <key> [key ...]
        python tools/trip_rule.py <session-label>          # every guard trip
@@ -272,9 +272,9 @@ def rule(
         )
         return out
     out["basis"] = (
-        "no external signal fired — bisect with isolated runs "
-        "(tools/ab_cc_locality.py / ab_worker_respawn.py pattern) before "
-        "touching any floor"
+        "no external signal fired — bisect with isolated, interleaved "
+        "A/B runs (SCALING_r13.md pattern; perfbench/run.py --trace 1 "
+        "for the per-layer split) before touching any floor"
     )
     return out
 
