@@ -3,7 +3,8 @@
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line: ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
+line: ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"load": {"start": [...], "steal_pct": x}}`` (see :func:`compact_record`).
 
 Each query is fully materialized with a noop-format write (all partitions
 computed, nothing collected to the driver — the honest way to time a
@@ -122,26 +123,18 @@ def _steal_pct(
 
 def _worker_census() -> dict[tuple[int, int], dict] | None:
     """Snapshot the Python worker pool: ``{(pid, starttime): {"ppid",
-    "cpu_s", "rss_mb"}}`` for every live ``pyspark.daemon`` process (the
-    daemon plus its forked workers — both carry ``python -m
-    pyspark.daemon`` in cmdline; the daemon is the one whose parent is
-    the JVM, workers are its children). Keyed by (pid, starttime) so PID
-    reuse can't alias a respawned worker to a dead one. Returns None
-    off-Linux. ~2 ms per scan — bracketing every query is free relative
-    to the queries.
-
-    Purpose (SCALING_r12 watch): the residual isolated-vs-full-session
-    gap on the Arrow-lane heavies was narrowed to "JVM code-cache or
-    worker-pool COMPOSITION state". Per-query spawn/death counts across
-    a full bench either confirm pool churn as the mechanism (respawns
-    line up with the slow keys) or eliminate it (stable pool, gap must
-    be JVM-side)."""
+    "cpu_s"}}`` for every live ``pyspark.daemon`` process (the daemon plus
+    its forked workers — both carry ``python -m pyspark.daemon`` in
+    cmdline; the daemon is the one whose parent is the JVM, workers are
+    its children). Keyed by (pid, starttime) so PID reuse can't alias a
+    respawned worker to a dead one. Returns None off-Linux. ~2 ms per
+    scan. perfbench/run.py reads it for the Python lane's CPU time and
+    worker spawns."""
     import glob  # noqa: PLC0415
 
     pool: dict[tuple[int, int], dict] = {}
     try:
         hz = os.sysconf("SC_CLK_TCK")
-        page_mb = os.sysconf("SC_PAGE_SIZE") / (1 << 20)
     except (AttributeError, ValueError, OSError):
         return None
     for path in glob.glob("/proc/[0-9]*/cmdline"):
@@ -158,8 +151,6 @@ def _worker_census() -> dict[tuple[int, int], dict] | None:
             pid = int(path.split("/")[2])
             with open(f"/proc/{pid}/stat") as fh:
                 stat = fh.read()
-            with open(f"/proc/{pid}/statm") as fh:
-                rss_pages = int(fh.read().split()[1])
         except (OSError, ValueError, IndexError):
             continue  # process died mid-scan — it shows up as "died"
         # comm (field 2) may embed spaces/parens: parse after last ')'
@@ -167,10 +158,6 @@ def _worker_census() -> dict[tuple[int, int], dict] | None:
         pool[(pid, int(after[19]))] = {
             "ppid": int(after[1]),
             "cpu_s": round((int(after[11]) + int(after[12])) / hz, 2),
-            "rss_mb": round(rss_pages * page_mb, 1),
-            # thread count exposes BLAS-pool storms: this box's numpy
-            # spawns 32 OpenBLAS threads at import unless capped
-            "threads": int(after[17]),
         }
     return pool
 
@@ -185,68 +172,17 @@ def _census_delta(
     if w0 is None or w1 is None:
         return None
     spawned = [k for k in w1 if k not in w0]
-    died = [k for k in w0 if k not in w1]
     survivors = [k for k in w1 if k in w0]
     cpu_deltas = [w1[k]["cpu_s"] - w0[k]["cpu_s"] for k in survivors]
-    # PID-grain channels (round-12 verdict ask #3): the composition-state
-    # hypothesis needs worker IDENTITIES, not counts — whether a slow
-    # excursion ran on long-lived workers or a fresh cohort, and which
-    # workers actually burned CPU during the bracket. `worked` maps pid ->
-    # cpu_s consumed THIS query (survivors' deltas + spawned totals),
-    # filtered at 0.05 s so JVM-only brackets stay one short line. Pool
-    # is <= 33 processes on this box, so the lists are bounded.
-    worked = {
-        str(k[0]): round(d, 2)
-        for k, d in zip(survivors, cpu_deltas)
-        if d >= 0.05
-    }
-    worked.update(
-        {str(k[0]): w1[k]["cpu_s"] for k in spawned if w1[k]["cpu_s"] >= 0.05}
-    )
     return {
         "key": key,
         "sec": sec,
         "n_before": len(w0),
         "n_after": len(w1),
         "spawned": len(spawned),
-        "died": len(died),
-        "spawned_pids": sorted(k[0] for k in spawned),
-        "died_pids": sorted(k[0] for k in died),
-        "worked": worked,
+        "died": sum(1 for k in w0 if k not in w1),
         "pool_cpu_s": round(sum(cpu_deltas) + sum(w1[k]["cpu_s"] for k in spawned), 2),
-        "cpu_max_s": round(max(cpu_deltas, default=0.0), 2),
-        "rss_max_mb": round(max((w1[k]["rss_mb"] for k in w1), default=0.0), 1),
-        "threads_max": max((w1[k].get("threads", 0) for k in w1), default=0),
-        "oldest_start": min((k[1] for k in w1), default=0),
     }
-
-
-def _membw_probe_gbps() -> float | None:
-    """Median-of-3 single-thread memcpy bandwidth (64 MB numpy copy, ~60
-    ms total). Memory-bandwidth contention from a co-tenant VM slows
-    every query uniformly while loadavg AND steal stay clean — the one
-    external signal the other two probes cannot see (r10e: gram-matrix
-    artifact tripped on load1 0.25 / steal 0.9%). Calibration on this
-    box: ~6.9 GB/s idle, ~3.5 GB/s under a deliberate 16-way copy burn.
-    NOTE: a.copy() allocates a fresh destination every rep, so the
-    destination's first-touch page faults land INSIDE the timed window;
-    readings systematically under-read true copy bandwidth (ADVICE r12).
-    Kept that way deliberately: every historical ledger/census record
-    and the calibration numbers above were taken with this shape, and
-    the probe is a relative burst detector, not an absolute meter —
-    _membw_spot_gbps shares the same flaw for the same reason."""
-    try:
-        import numpy as np  # noqa: PLC0415
-    except ImportError:
-        return None
-    a = np.zeros(64 << 20, dtype=np.uint8)
-    reps = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        a.copy()
-        reps.append(time.perf_counter() - t0)
-    reps.sort()
-    return round((2 * a.nbytes) / reps[1] / 1e9, 2)
 
 
 def main() -> None:
@@ -266,7 +202,6 @@ def main() -> None:
     # "settled" start; inputs are 17 MB, so cache coldness was immaterial).
     load_start = os.getloadavg()
     cpu_start = _cpu_stat_sample()
-    membw_start = _membw_probe_gbps()
 
     spark = get_spark(app_name="mr-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -315,81 +250,10 @@ def main() -> None:
     # dilutes it, and a guard trip on one query can't be attributed
     # after the fact. Bracketing each query with /proc/stat samples
     # (~µs each) records which queries ran under external contention,
-    # so a trip ruling can cite the burst instead of guessing.
+    # so bench_guard.py can annotate a trip with the burst.
     query_steal: dict[str, float] = {}
-    census_on = bool(os.environ.get("SPARK_GRAFT_WORKER_CENSUS"))
-    census_rows: list[dict] = []
-    _spot_buf: dict = {}  # persistent membw-spot buffer (see below)
-
-    def _jvm_metrics() -> tuple[int, int, int, int] | None:
-        """(total JIT ms, total GC ms, code-heap used, code-heap max)
-        from the driver JVM's management beans — in local mode the driver
-        IS the executor, so these cover the whole engine. Per-query
-        deltas separate 'the plan is slow' from 'the JVM was
-        compiling/collecting under this query' (the similarity_join
-        session-excursion watch: a first-execution JIT storm looks
-        identical to a slow plan in wall time)."""
-        try:
-            mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-            jit = mf.getCompilationMXBean().getTotalCompilationTime()
-            gc = sum(
-                b.getCollectionTime()
-                for b in mf.getGarbageCollectorMXBeans()
-            )
-            # CodeHeap fill ratio: a full code cache disables the JIT
-            # ("CodeCache is full. Compiler has been disabled.") and hot
-            # codegen loops silently run interpreted — the candidate
-            # mechanism for compute-dense keys slowing ONLY late in a
-            # 45-query session (similarity_join watch)
-            code_used = code_max = 0
-            for p in mf.getMemoryPoolMXBeans():
-                if "CodeHeap" in p.getName() or "Code Cache" in p.getName():
-                    u = p.getUsage()
-                    code_used += u.getUsed()
-                    code_max += u.getMax()
-            return int(jit), int(gc), int(code_used), int(code_max)
-        except Exception:  # noqa: BLE001 — diagnostics must never fail the bench
-            return None
-
-    def _membw_spot_gbps() -> float | None:
-        """One 64 MB copy between queries (~15 ms) — a spot membw reading
-        per census bracket. Session-grain probes under-resolve the
-        bursty co-tenant interference that makes per-key excursions ROAM
-        between sessions (the similarity_join trip-#1 attribution); a
-        bracket-grain reading lets a trip ruling see whether THE SLOW
-        QUERY ran inside a bandwidth dip. Census-only: never taken
-        during a query, so it cannot perturb the timings.
-
-        Calibration (two lessons, one per session): 64 MB matches
-        _membw_probe_gbps's buffer — the first cut's 16 MB read a
-        different, partly-L3-resident regime (~4 GB/s where the probe
-        read 9). And the SOURCE buffer must be allocated ONCE — np.zeros
-        is lazily zeroed, so a fresh source per spot pays first-touch
-        faults inside the timed copy (r12z still peaked at 4.35 on a
-        9-10 GB/s host). The DESTINATION of a.copy() is still freshly
-        allocated per spot, so destination-side first-touch faults
-        remain inside every timed window (ADVICE r12) — included BY
-        DESIGN: it keeps spots comparable to _membw_probe_gbps and to
-        all r12 ledger records, which share the same shape; both are
-        relative burst detectors, not absolute meters. Spot values from
-        r12x–r12z are comparable only within-session."""
-        try:
-            import numpy as np  # noqa: PLC0415
-        except ImportError:
-            return None
-        a = _spot_buf.get("a")
-        if a is None:
-            a = _spot_buf["a"] = np.zeros(64 << 20, dtype=np.uint8)
-            a.copy()  # fault pages in OUTSIDE the timed window
-        t0 = time.perf_counter()
-        a.copy()
-        return round((2 * a.nbytes) / (time.perf_counter() - t0) / 1e9, 2)
 
     def timed(key: str, sink: dict[str, float]) -> None:
-        w0 = _worker_census() if census_on else None
-        j0 = _jvm_metrics() if census_on else None
-        m0 = _membw_spot_gbps() if census_on else None
-        m0b = _membw_spot_gbps() if census_on else None  # paired (see below)
         c0 = _cpu_stat_sample()
         t0 = time.perf_counter()
         materialize(QUERIES[key](spark, sf_dir))
@@ -397,36 +261,6 @@ def main() -> None:
         s = _steal_pct(c0, _cpu_stat_sample())
         if s is not None:
             query_steal[key] = s
-        if census_on:
-            row = _census_delta(key, sink[key], w0, _worker_census())
-            if row is not None:
-                j1 = _jvm_metrics()
-                if j0 is not None and j1 is not None:
-                    row["jit_ms"] = j1[0] - j0[0]
-                    row["gc_ms"] = j1[1] - j0[1]
-                    row["codeheap_used_mb"] = round(j1[2] / (1 << 20), 1)
-                    row["codeheap_max_mb"] = round(j1[3] / (1 << 20), 1)
-                if m0 is not None:
-                    row["membw_before_gbps"] = m0
-                    if m0b is not None:
-                        row["membw_before2_gbps"] = m0b
-                    # paired spots (round-14 probe finding): the FIRST
-                    # copy after a Spark stage frequently lands in a
-                    # transient page-reclaim stall (measured: 5/8 first
-                    # spots read 0.2-0.6 GB/s on an idle box while the
-                    # immediate second copy read 7.7-10.7 every time).
-                    # The second copy is the effective reading; the
-                    # first is kept for continuity with r12x-r13 records
-                    # and because (first collapsed, second collapsed)
-                    # still distinguishes true bus saturation from the
-                    # self-inflicted stall.
-                    m1 = _membw_spot_gbps()
-                    m1b = _membw_spot_gbps()
-                    if m1 is not None:
-                        row["membw_after_gbps"] = m1
-                    if m1b is not None:
-                        row["membw_after2_gbps"] = m1b
-                census_rows.append(row)
 
     times: dict[str, float] = {}
     for key in HEADLINE:
@@ -450,21 +284,21 @@ def main() -> None:
             "start": [round(x, 2) for x in load_start],
             "end": [round(x, 2) for x in load_end],
             "steal_pct": _steal_pct(cpu_start, _cpu_stat_sample()),
-            "membw_gbps": [membw_start, _membw_probe_gbps()],
             "query_steal_pct": query_steal,
         },
     }
-    attach_weather_and_rulings(record, census_rows)
     _append_ledger(record)
-    if census_on and census_rows:
-        _append_census(record, census_rows)
-    # The driver captures only the TAIL of stdout (round 14 lost its
-    # round-over-round comparison because round 13's full record, grown by
-    # the load/weather/rulings diagnostics, truncated mid-JSON at the
-    # capture bound). Print a compact record as the FINAL stdout line:
-    # same metric/value/queries/extended entries as always (nothing
-    # removed or renamed), with the diagnostics living only in the
-    # BENCH_SESSIONS.jsonl ledger line written above.
+    print(json.dumps(compact_record(record)))
+
+
+def compact_record(record: dict) -> dict:
+    """The record's final stdout line. The driver captures only the TAIL
+    of stdout (round 14 lost its round-over-round comparison because
+    round 13's full record, grown by diagnostics, truncated mid-JSON at
+    the capture bound), so this keeps the metric/value/queries/extended
+    entries as always plus one small host-load scalar: load1/5/15 at
+    start and the session's steal%. The per-query steal map and the end
+    load live only in the BENCH_SESSIONS.jsonl ledger line."""
     compact = {
         k: record[k]
         for k in (
@@ -477,67 +311,9 @@ def main() -> None:
             "sf",
         )
     }
-    print(json.dumps(compact))
-
-
-def attach_weather_and_rulings(record: dict, census_rows: list[dict]) -> None:
-    """Weather index (round-13 verdict ask #2): fold the bracket-grain
-    membw spots into a per-session index IN the ledger record, so the
-    floor/median tools can split evidence by weather without joining
-    the census sidecar by hand. Spot-clean thresholds + calibration
-    live in tools/bench_guard.py (shared with floor_medians).
-
-    Trip rulings (ask #3): every guard trip is ruled mechanically AT
-    RECORD TIME by tools/trip_rule.py and the rulings land in the
-    session's own ledger row (``trip_rulings``; [] = guard-clean). Both
-    are diagnostics: they must never fail the bench, and the rule never
-    touches BENCH_FLOOR.json — floors remain floor_medians' business."""
-    try:
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-        )
-        import bench_guard  # noqa: PLC0415
-        import trip_rule  # noqa: PLC0415
-
-        weather = bench_guard.weather_from_census(census_rows)
-        if weather is not None:
-            weather["spot_clean"] = bench_guard.spot_clean(weather)
-            record["load"]["weather"] = weather
-        with open(bench_guard.FLOOR_PATH) as fh:
-            floors = json.load(fh)
-        floor = dict(floors["headline"])
-        floor.update(floors["extended"])
-        record["trip_rulings"] = trip_rule.rule_record(
-            record,
-            census_rows,
-            floor,
-            label=os.environ.get("SPARK_GRAFT_SESSION_LABEL"),
-        )
-    except Exception as exc:  # noqa: BLE001 — diagnostics must never fail the bench
-        record["trip_rulings_error"] = repr(exc)
-
-
-def _append_census(record: dict, rows: list[dict]) -> None:
-    """Sidecar evidence for SPARK_GRAFT_WORKER_CENSUS=1 sessions: one
-    JSON line per session holding the per-query pool deltas. Separate
-    file (default WORKER_CENSUS.jsonl beside bench.py, override via
-    SPARK_GRAFT_CENSUS_OUT) so the BENCH_SESSIONS.jsonl schema the floor
-    tools read stays exactly as documented. Best-effort like the ledger."""
-    entry = {
-        "ts": round(time.time(), 1),
-        "label": os.environ.get("SPARK_GRAFT_SESSION_LABEL"),
-        "headline_total": record["value"],
-        "steal_pct": record["load"]["steal_pct"],
-        "queries": rows,
-    }
-    path = os.environ.get("SPARK_GRAFT_CENSUS_OUT") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "WORKER_CENSUS.jsonl"
-    )
-    try:
-        with open(path, "a") as fh:
-            fh.write(json.dumps(entry) + "\n")
-    except OSError:
-        pass
+    load = record["load"]
+    compact["load"] = {"start": load["start"], "steal_pct": load["steal_pct"]}
+    return compact
 
 
 def _append_ledger(record: dict) -> None:

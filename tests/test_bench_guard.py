@@ -254,34 +254,6 @@ def test_floor_medians_session_filter(tmp_path):
     assert reasons["c.json"] == "not settled"
 
 
-def test_session_context_flags_memory_bus_contention():
-    """The r10e lesson: a session can be loadavg-settled AND steal-clean
-    yet externally contended on the memory bus — the membw probe is the
-    only one of the three that sees it. Below threshold (either sample)
-    must annotate; absent/None samples must not."""
-    slow = {"load": {"start": [0.3, 1, 1], "steal_pct": 0.5,
-                     "membw_gbps": [6.8, 3.1]}}
-    out = session_context(slow)
-    assert "NOT SETTLED" in out and "memory-bus" in out
-    ok = {"load": {"start": [0.3, 1, 1], "steal_pct": 0.5,
-                   "membw_gbps": [6.8, 6.5]}}
-    assert "NOT SETTLED" not in session_context(ok)
-    missing = {"load": {"start": [0.3, 1, 1], "membw_gbps": [None, None]}}
-    assert "NOT SETTLED" not in session_context(missing)
-
-    from tools.floor_medians import _settled
-
-    assert not _settled(slow)
-    assert _settled(ok)
-
-
-def test_bench_membw_probe_runs():
-    import bench
-
-    bw = bench._membw_probe_gbps()
-    assert bw is None or bw > 0.1
-
-
 def test_guard_attributes_trips_to_query_level_steal(tmp_path):
     """r10i lesson: a guard trip whose query ran under a measured steal
     burst must carry the attribution on its line (and still FAIL — the
@@ -365,3 +337,61 @@ def test_floor_medians_accepts_ledger_pairs():
     used, skipped = load_sessions([("r11x", clean), ("r11y", hot)], floor)
     assert [n for n, _ in used] == ["r11x"]
     assert [n for n, _ in skipped] == ["r11y"]
+
+
+def _worst_case_record() -> dict:
+    """A full bench record with every timing at its widest plausible
+    width (999.999 s) and a full ledger-grade load block."""
+    import bench
+
+    queries = dict.fromkeys(bench.HEADLINE, 999.999)
+    extended = dict.fromkeys(bench.EXTENDED, 999.999)
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "extended": extended,
+        "extended_total": round(sum(extended.values()), 3),
+        "sf": 0.001,
+        "load": {
+            "start": [999.99, 999.99, 999.99],
+            "end": [999.99, 999.99, 999.99],
+            "steal_pct": 100.0,
+            "query_steal_pct": dict.fromkeys([*queries, *extended], 100.0),
+        },
+    }
+
+
+def test_compact_record_fits_the_capture_bound():
+    """The final stdout line must parse from the driver's 2000-char
+    stdout tail: the worst-case record serialises under the bound, keeps
+    the contract keys in their order and carries only the small load
+    scalar (never the per-query steal map)."""
+    import bench
+
+    line = json.dumps(bench.compact_record(_worst_case_record()))
+    assert len(line) < 2000, len(line)
+    compact = json.loads(line)
+    assert list(compact) == [
+        "metric", "value", "unit", "queries", "extended",
+        "extended_total", "sf", "load",
+    ]
+    assert list(compact["queries"]) == bench.HEADLINE
+    assert list(compact["extended"]) == bench.EXTENDED
+    assert compact["load"] == {"start": [999.99, 999.99, 999.99],
+                               "steal_pct": 100.0}
+
+
+def test_session_context_reads_the_compact_record():
+    """The fresh-run and driver-wrapper paths see only the compact line:
+    it must carry enough load context for a real settled / NOT SETTLED
+    annotation."""
+    import bench
+
+    record = _worst_case_record()
+    out = session_context(bench.compact_record(record))
+    assert "unknown" not in out and "NOT SETTLED" in out
+    record["load"].update(start=[0.5, 0.5, 0.5], steal_pct=0.3)
+    out = session_context(bench.compact_record(record))
+    assert "unknown" not in out and "settled (load1 0.50" in out

@@ -1,11 +1,10 @@
-"""Worker-pool census helpers in bench.py (SCALING_r12 variance watch).
+"""Worker-pool census helpers in bench.py.
 
-The census brackets each bench query with a /proc scan of the
-``pyspark.daemon`` process tree so a full session records pool
-COMPOSITION changes — the one mechanism left standing for the
-isolated-vs-full-session gap on the Arrow-lane heavies. These tests pin
-the delta arithmetic (pure) and the live-scan contract (shape only — no
-Spark session is started here; an empty pool is a valid result).
+The census is a /proc scan of the ``pyspark.daemon`` process tree;
+perfbench/run.py brackets each key with two scans to count the Python
+lane's CPU time and worker spawns. These tests pin the delta arithmetic
+(pure) and the live-scan contract (shape only — no Spark session is
+started here; an empty pool is a valid result).
 """
 
 from __future__ import annotations
@@ -13,38 +12,34 @@ from __future__ import annotations
 import bench
 
 
-def _w(ppid: int, cpu: float, rss: float) -> dict:
-    return {"ppid": ppid, "cpu_s": cpu, "rss_mb": rss}
+def _w(ppid: int, cpu: float) -> dict:
+    return {"ppid": ppid, "cpu_s": cpu}
 
 
 def test_census_delta_stable_pool():
-    w0 = {(10, 100): _w(1, 1.0, 50.0), (11, 101): _w(10, 2.0, 60.0)}
-    w1 = {(10, 100): _w(1, 1.5, 55.0), (11, 101): _w(10, 4.0, 70.0)}
+    w0 = {(10, 100): _w(1, 1.0), (11, 101): _w(10, 2.0)}
+    w1 = {(10, 100): _w(1, 1.5), (11, 101): _w(10, 4.0)}
     row = bench._census_delta("k", 1.23, w0, w1)
     assert row["spawned"] == 0 and row["died"] == 0
     assert row["n_before"] == 2 and row["n_after"] == 2
     assert row["pool_cpu_s"] == 2.5  # 0.5 + 2.0
-    assert row["cpu_max_s"] == 2.0
-    assert row["rss_max_mb"] == 70.0
-    assert row["oldest_start"] == 100
 
 
 def test_census_delta_respawn_counts_new_worker_cpu():
     # worker (11,101) dies; (12,200) replaces it with 3s of its own CPU —
     # the respawn's CPU must be attributed to the query that paid for it.
-    w0 = {(10, 100): _w(1, 1.0, 50.0), (11, 101): _w(10, 2.0, 60.0)}
-    w1 = {(10, 100): _w(1, 1.5, 55.0), (12, 200): _w(10, 3.0, 40.0)}
+    w0 = {(10, 100): _w(1, 1.0), (11, 101): _w(10, 2.0)}
+    w1 = {(10, 100): _w(1, 1.5), (12, 200): _w(10, 3.0)}
     row = bench._census_delta("k", 1.0, w0, w1)
     assert row["spawned"] == 1 and row["died"] == 1
     assert row["pool_cpu_s"] == 3.5  # survivor 0.5 + newcomer 3.0
-    assert row["oldest_start"] == 100
 
 
 def test_census_delta_pid_reuse_is_not_a_survivor():
     # same PID, different starttime => a different process: the old CPU
     # counter must not be subtracted from the new process's.
-    w0 = {(11, 101): _w(10, 50.0, 60.0)}
-    w1 = {(11, 300): _w(10, 1.0, 30.0)}
+    w0 = {(11, 101): _w(10, 50.0)}
+    w1 = {(11, 300): _w(10, 1.0)}
     row = bench._census_delta("k", 1.0, w0, w1)
     assert row["spawned"] == 1 and row["died"] == 1
     assert row["pool_cpu_s"] == 1.0
@@ -62,28 +57,5 @@ def test_live_scan_shape():
         return
     for (pid, start), info in pool.items():
         assert isinstance(pid, int) and isinstance(start, int)
-        assert set(info) == {"ppid", "cpu_s", "rss_mb", "threads"}
+        assert set(info) == {"ppid", "cpu_s"}
 
-
-def test_census_delta_pid_grain_channels():
-    """Round-13 watch instrumentation: the delta must name WHICH workers
-    spawned/died and which burned CPU during the bracket (>= 0.05 s),
-    so a composition-state ruling can distinguish 'slow on a fresh
-    cohort' from 'slow on long-lived workers'."""
-    w0 = {
-        (10, 1): {"ppid": 1, "cpu_s": 1.0, "rss_mb": 50.0, "threads": 2},
-        (11, 2): {"ppid": 10, "cpu_s": 2.0, "rss_mb": 60.0, "threads": 2},
-        (12, 3): {"ppid": 10, "cpu_s": 3.0, "rss_mb": 60.0, "threads": 2},
-    }
-    w1 = {
-        (10, 1): {"ppid": 1, "cpu_s": 1.0, "rss_mb": 50.0, "threads": 2},
-        (11, 2): {"ppid": 10, "cpu_s": 2.5, "rss_mb": 60.0, "threads": 2},
-        # (12, 3) died; (13, 4) spawned and worked
-        (13, 4): {"ppid": 10, "cpu_s": 0.7, "rss_mb": 55.0, "threads": 2},
-    }
-    row = bench._census_delta("k", 1.0, w0, w1)
-    assert row["spawned_pids"] == [13]
-    assert row["died_pids"] == [12]
-    # idle survivor 10 filtered out; survivor 11's delta and spawn 13's
-    # total both appear
-    assert row["worked"] == {"11": 0.5, "13": 0.7}

@@ -55,108 +55,6 @@ SETTLED_LOAD1 = 4.0
 # session-AVERAGE dilutes bursts, so the threshold sits just above the
 # quiet band, not halfway to the sustained-burn figure.
 SETTLED_STEAL_PCT = 2.0
-# Single-thread memcpy bandwidth below which the session is annotated as
-# memory-bandwidth contended — the external signal loadavg and steal both
-# miss (a co-tenant saturating the memory bus shows zero steal). Box
-# calibration: ~6.9 GB/s idle, ~3.5 GB/s under a deliberate 16-way burn;
-# 4.5 splits the two modes with margin on both sides.
-SETTLED_MEMBW_GBPS = 4.5
-# Spot-weather criterion (round-13 verdict ask #2): the session-edge
-# membw probes + steal% stopped isolating quiet sessions once the
-# bracket-grain spot channel landed (r12x) — every censused session
-# shows SOME collapsed spots (the host's bursts are that frequent), so
-# the binary "settled" column drifted into carrying weather. The spot
-# channel itself is the fix: a session is SPOT-CLEAN when the median of
-# its ~90 bracket-edge spots is high AND the collapsed fraction is low.
-# Calibration on the full r12x–r13v census history (30 sessions): quiet
-# sessions read median 7.7–8.8 GB/s with 28–34% collapsed spots and
-# headline totals 16.3–20.0 s; every session whose headline exceeded
-# 21 s reads median <= 7.6 or collapse >= 38%. Thresholds sit on that
-# gap. The old steal/load/membw columns stay (continuity with r08–r13
-# evidence); this is an ADDITIONAL criterion, not a replacement.
-SPOT_CLEAN_MED_GBPS = 7.7
-SPOT_CLEAN_COLLAPSED_FRAC = 0.34
-SPOT_COLLAPSE_GBPS = 4.5  # same cut as trip_rule signal 3
-
-
-def effective_spots(q: dict) -> list[float]:
-    """The bracket's effective membw readings: max over each (first,
-    second) copy pair. The r14 probe proved the FIRST copy after a
-    Spark stage frequently lands in a transient page-reclaim stall
-    (5/8 collapsed on an idle box) while the immediate second copy
-    always read clean — a true bus saturation depresses both, so the
-    pair max is the honest reading. Pre-r14 records have no second
-    copy; their single spot passes through unchanged (the 0.34
-    collapsed-fraction calibration absorbs their false-collapse
-    floor)."""
-    out = []
-    for first, second in (
-        ("membw_before_gbps", "membw_before2_gbps"),
-        ("membw_after_gbps", "membw_after2_gbps"),
-    ):
-        pair = [v for v in (q.get(first), q.get(second)) if v is not None]
-        if pair:
-            out.append(max(pair))
-    return out
-
-
-def weather_from_census(queries: list[dict]) -> dict | None:
-    """Per-session weather index from the census brackets' membw spots:
-    spot count, collapsed count (< SPOT_COLLAPSE_GBPS), min and median —
-    over EFFECTIVE readings (pair max; see effective_spots). None when
-    the brackets carry no spots (pre-r12x records)."""
-    spots = [v for q in queries or [] for v in effective_spots(q)]
-    if not spots:
-        return None
-    ordered = sorted(spots)
-    n = len(ordered)
-    med = (
-        ordered[n // 2]
-        if n % 2
-        else (ordered[n // 2 - 1] + ordered[n // 2]) / 2
-    )
-    return {
-        "spots_total": n,
-        "spots_collapsed": sum(1 for v in spots if v < SPOT_COLLAPSE_GBPS),
-        "spot_min_gbps": round(min(spots), 2),
-        "spot_med_gbps": round(med, 2),
-    }
-
-
-def spot_clean(weather: dict | None) -> bool | None:
-    """True/False per the spot-weather criterion; None when the session
-    has no weather index (pre-r12x — the old columns are all it has)."""
-    if not weather or not weather.get("spots_total"):
-        return None
-    frac = weather["spots_collapsed"] / weather["spots_total"]
-    return (
-        weather["spot_med_gbps"] >= SPOT_CLEAN_MED_GBPS
-        and frac <= SPOT_CLEAN_COLLAPSED_FRAC
-    )
-
-
-def census_weather_by_label(path: str | None = None) -> dict[str, dict]:
-    """label -> weather index recomputed from WORKER_CENSUS.jsonl, so
-    ledger records that predate the in-record weather field (r12x–r13v)
-    get the index retroactively instead of being ungradeable."""
-    census = path or os.environ.get("SPARK_GRAFT_CENSUS_OUT") or os.path.join(
-        REPO, "WORKER_CENSUS.jsonl"
-    )
-    out: dict[str, dict] = {}
-    try:
-        with open(census) as fh:
-            for line in fh:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                label = rec.get("label")
-                w = weather_from_census(rec.get("queries") or [])
-                if label and w:
-                    out[label] = w  # last write wins, like _session()
-    except OSError:
-        pass
-    return out
 
 
 def check(
@@ -288,14 +186,6 @@ def session_context(parsed: dict) -> str:
         problems.append(
             f"hypervisor steal {float(steal):.1f}% during the session > "
             f"{SETTLED_STEAL_PCT:g}% — external contention"
-        )
-    membw = [
-        float(x) for x in (load.get("membw_gbps") or []) if x is not None
-    ]
-    if membw and min(membw) < SETTLED_MEMBW_GBPS:
-        problems.append(
-            f"memcpy bandwidth {min(membw):.1f} GB/s < "
-            f"{SETTLED_MEMBW_GBPS:g} — memory-bus contention"
         )
     if problems:
         return (

@@ -14,9 +14,9 @@ evidence. This tool makes the rule executable instead of ad hoc:
 
 Sessions are EXCLUDED from medians when (a) the guard flags any
 regression in them, or (b) their own load context says NOT SETTLED
-(load1 at start, steal% during the window, memcpy bandwidth below the
-contention threshold — records predating the load field count as
-settled, matching how the r08/r09 medians were taken by hand).
+(load1 at start or steal% during the window above its threshold —
+records predating the load field count as settled, matching how the
+r08/r09 medians were taken by hand).
 Output: one line per query whose median is notable (below
 RATCHET_FRACTION -> ratchet candidate; above WATCH_RATIO -> drift
 watch), then a summary. Exit code is always 0 — this is evidence, not
@@ -35,12 +35,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bench_guard import (  # noqa: E402
     FLOOR_PATH,
     SETTLED_LOAD1,
-    SETTLED_MEMBW_GBPS,
     SETTLED_STEAL_PCT,
-    census_weather_by_label,
     check,
     ledger_records,
-    spot_clean,
     times_from,
 )
 
@@ -58,34 +55,12 @@ def _settled(parsed: dict) -> bool:
     if float(start[0]) > SETTLED_LOAD1:
         return False
     steal = load.get("steal_pct")
-    if steal is not None and float(steal) > SETTLED_STEAL_PCT:
-        return False
-    membw = [
-        float(x) for x in (load.get("membw_gbps") or []) if x is not None
-    ]
-    return not membw or min(membw) >= SETTLED_MEMBW_GBPS
+    return steal is None or float(steal) <= SETTLED_STEAL_PCT
 
 
-def _weather(parsed: dict, name: str, by_label: dict[str, dict]) -> dict | None:
-    """The session's weather index: in-record (r14+ bench.py writes it)
-    or recomputed from the census sidecar by label (r12x–r13v records)."""
-    w = (parsed.get("load") or {}).get("weather")
-    if w:
-        return w
-    return by_label.get(name) or by_label.get(os.path.basename(name))
-
-
-def load_sessions(
-    paths: list[str], floor: dict[str, float], require_spot_clean: bool = True
-):
-    """Filter sessions to settled + guard-clean (+ spot-clean by default
-    — round-13 verdict ask #2: the steal/load criterion alone passes
-    sessions whose own census shows a collapsed-spot storm, dragging the
-    "settled" medians up). Sessions with NO weather index (pre-r12x) are
-    judged on the old columns only, exactly as before — continuity.
-    ``paths`` entries are file paths, or (name, parsed-record) pairs for
-    ledger entries."""
-    by_label = census_weather_by_label() if require_spot_clean else {}
+def load_sessions(paths: list[str], floor: dict[str, float]):
+    """Filter sessions to settled + guard-clean. ``paths`` entries are
+    file paths, or (name, parsed-record) pairs for ledger entries."""
     named: list[tuple[str, dict]] = []
     for p in paths:
         if isinstance(p, tuple):
@@ -114,11 +89,6 @@ def load_sessions(
         if not _settled(parsed):
             skipped.append((p, "not settled"))
             continue
-        if require_spot_clean:
-            clean = spot_clean(_weather(parsed, p, by_label))
-            if clean is False:
-                skipped.append((p, "stormy spots (weather index)"))
-                continue
         used.append((p, times))
     return used, skipped
 
@@ -130,12 +100,6 @@ def main(argv: list[str]) -> int:
     floor.update(floors["extended"])
 
     args = argv[1:]
-    require_spot_clean = True
-    if "--legacy-settled" in args:
-        # old behavior (steal/load/membw columns only) for continuity
-        # with how the r08–r13 medians were taken
-        args = [a for a in args if a != "--legacy-settled"]
-        require_spot_clean = False
     if args[:1] == ["--all-r"]:
         paths = []
         for r in args[1:]:
@@ -167,9 +131,7 @@ def main(argv: list[str]) -> int:
         paths += args[2:]
     else:
         paths = args
-    used, skipped = load_sessions(
-        paths, floor, require_spot_clean=require_spot_clean
-    )
+    used, skipped = load_sessions(paths, floor)
     for p, why in skipped:
         print(f"excluded: {os.path.basename(p)} — {why}")
     print(f"sessions in medians: {len(used)}"
