@@ -29,6 +29,17 @@ hand-pin escape hatch (``_CHANGED_PIN_KEYS``), and refreshing too
 rarely only OVER-reports changes (a verified key stays pinned one
 extra round — conservative).
 
+Late refresh: if the round start was missed and edits have already
+landed, the working tree is no longer the verified source — a snapshot
+of it records the edited bodies as verified and HIDES those edits (the
+under-report direction). Snapshot the round's close commit instead:
+``git archive <close-commit> | tar -x -C <dir>``, run
+``python tools/refresh_source_manifest.py <round>`` inside ``<dir>``
+(the tool hashes the package beside it), and copy ``<dir>``'s
+``KEY_SOURCE_MANIFEST.json`` back. The close commit is the one that
+added the round's ``CORRECTNESS_r<round>.json``; the snapshot is honest
+only when its package sources are the ones those rows verified.
+
 Granularity: the hash covers the key FUNCTION's own source segment, its
 oracle string, AND the source of every same-package callable reachable
 through bare-name calls (``ast.Call`` over ``ast.Name``) — walked to a

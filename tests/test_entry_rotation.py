@@ -162,7 +162,11 @@ def test_manifest_covers_every_driver_verified_key():
     assert manifest.get("round") == latest_round, (
         f"manifest snapshot is of round {manifest.get('round')} but the "
         f"latest driver evidence is round {latest_round} — run "
-        f"tools/refresh_source_manifest.py {latest_round} BEFORE editing"
+        f"tools/refresh_source_manifest.py {latest_round} BEFORE editing; "
+        f"once edits have landed, snapshot the round-{latest_round} close "
+        f"commit instead (git archive it, run the tool in that tree, copy "
+        f"KEY_SOURCE_MANIFEST.json back) — a snapshot of the edited tree "
+        f"hides those edits from the changed tier"
     )
 
 

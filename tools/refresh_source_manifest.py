@@ -9,6 +9,18 @@ previous round's close (the source the latest driver rows verified):
 See mapreduce_6_824_lab1_spark/manifest.py for the changed-key-tier
 design and why the refresh timing matters (refreshing after mid-round
 edits would hide those edits from the rotation's changed tier).
+
+Late refresh: once edits have landed, do NOT run the tool on the
+working tree — a snapshot of an edited tree records the edited source
+as verified and so hides those edits. Snapshot the round's close
+commit instead and copy the file back:
+
+    mkdir /tmp/close && git archive <close-commit> | tar -x -C /tmp/close
+    (cd /tmp/close && python tools/refresh_source_manifest.py <round>)
+    cp /tmp/close/KEY_SOURCE_MANIFEST.json .
+
+The tool hashes the package next to it, so run from the extracted
+tree it writes that tree's hashes into that tree's manifest.
 """
 
 from __future__ import annotations
