@@ -31,6 +31,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mapreduce_6_824_lab1_spark.catalog import configure, normalize_events
 from mapreduce_6_824_lab1_spark.operators.temporal import (
@@ -184,8 +185,8 @@ def _stage_event_id_slices(
     transformWithState keys (state carry-over must span real batch
     boundaries, not one pandas frame). Hash slicing is only valid for
     batch-order-INDEPENDENT operators (as-of enrichment, running
-    counts, medians); time-ordered state machines use the sessionizer
-    harness's time-ranged staging instead.
+    counts, medians); time-ordered state machines use the sessionizers'
+    time-ranged staging (``stateful._stage_time_ranges``) instead.
 
     Slice ``i`` is mtime-stamped to ``base + 60*i`` (``_stamp_mtime``):
     batch composition AND order are deterministic, and a caller staging
@@ -207,6 +208,21 @@ def _stage_event_id_slices(
             f"{scratch}/slice_{i}"
         )
         _stamp_mtime(f"{scratch}/slice_{i}", base + 60 * i)
+
+
+def _file_stream(
+    spark: SparkSession, schema: str | StructType, path: str
+) -> DataFrame:
+    """File stream over a staged scratch dir, ONE file per micro-batch
+    (``maxFilesPerTrigger=1``) in the files' mtime order — the source of
+    every staged-batch key. ``recursiveFileLookup`` reaches the part
+    files inside each staged ``slice_i``/``batch_i``/``flush`` dir."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(path)
+    )
 
 
 @query("stream_tumbling", oracle=TUMBLING_ORACLE)
@@ -398,15 +414,13 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned lakehouse table without a Delta-style sink — directory-
     per-batch plus an atomic manifest/rename step.
     """
-    import shutil
-    import tempfile
-
     src = _events_stream(spark, sf_dir)
     purchases = src.filter(F.col("event_type") == "purchase").select(
         "event_id", "ts", "value"
     )
-    scratch = tempfile.mkdtemp(prefix="mr_spark_febatch_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_febatch_", ignore_cleanup_errors=True
+    ) as scratch:
         def write_batch(bdf: DataFrame, batch_id: int) -> None:
             bdf.write.mode("overwrite").parquet(f"{scratch}/batch_{batch_id}")
 
@@ -429,8 +443,6 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # detach from the scratch files before they are removed
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -465,13 +477,11 @@ def stream_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle checks it exactly. The memory-sink table owns its rows,
     so the scratch input can be removed before returning.
     """
-    import shutil
-    import tempfile
-
     configure(spark)
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # ts stays long-ns
-    scratch = tempfile.mkdtemp(prefix="mr_spark_ratelim_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_ratelim_", ignore_cleanup_errors=True
+    ) as scratch:
         raw.repartition(RATE_LIMIT_INPUT_FILES).write.mode("overwrite").parquet(
             f"{scratch}/in"
         )
@@ -489,8 +499,6 @@ def stream_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
         # memory sink rows are session-resident; force materialization
         # before the scratch input disappears
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -782,15 +790,13 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     restartable mid-backlog: the file-source offsets live in the
     checkpoint, the file-sink manifest makes half-written output invisible,
     and both survive the driver's death."""
-    import shutil
-    import tempfile
-
     configure(spark)
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    scratch = tempfile.mkdtemp(prefix="mr_spark_restart_")
     # no shuffle-partition override: this stream is stateless (no agg, no
     # state store), so the state-partition sizing concern doesn't apply
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_restart_", ignore_cleanup_errors=True
+    ) as scratch:
         half = raw.filter(F.col("event_id") % 2 == 0)
         rest = raw.filter(F.col("event_id") % 2 == 1)
         src_dir = f"{scratch}/in"
@@ -828,8 +834,6 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value_cents"),
         )
         return spark.createDataFrame(audit.collect(), audit.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -868,9 +872,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     version chain gives restartability — a crashed batch leaves the prior
     version intact and foreachBatch's batchId makes the rewrite
     idempotent on retry."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     configure(spark)
@@ -883,8 +884,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(*cols)
     cut = F.lit(CDC_CUTOVER).cast("timestamp")
-    scratch = tempfile.mkdtemp(prefix="mr_spark_cdc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_cdc_", ignore_cleanup_errors=True
+    ) as scratch:
         state_path = f"{scratch}/state_v0"
         raw.filter(F.col("o_orderdate") < cut).write.parquet(state_path)
         src_dir = f"{scratch}/deltas"
@@ -947,8 +949,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_from_delta"),
         )
         return spark.createDataFrame(audit.collect(), audit.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1010,17 +1010,13 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    in_scratch = tempfile.mkdtemp(prefix="mr_spark_asofstream_in_")
     out = tempfile.mkdtemp(prefix="mr_stream_out_asof_")
     _OUT_SCRATCH.append(out)
-    try:
-        _stage_event_id_slices(ev, f"{in_scratch}/in")
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{in_scratch}/in")
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_asofstream_in_", ignore_cleanup_errors=True
+    ) as in_scratch:
+        _stage_event_id_slices(ev, in_scratch)
+        src = _file_stream(spark, ev.schema, in_scratch)
 
         def enrich(bdf: DataFrame, batch_id: int) -> None:
             enrich_frame(bdf).write.mode("overwrite").parquet(
@@ -1034,8 +1030,6 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(in_scratch, ignore_errors=True)
     # explicit schema: an all-empty-batch run leaves a data-less out dir
     # where inference would raise (same rationale as _run_to_parquet)
     return (
@@ -1079,14 +1073,12 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern: sink write volume tracks CHANGED groups per trigger, not
     state size — the reason dashboards upsert instead of replaying
     complete mode's full state."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from mapreduce_6_824_lab1_spark.catalog import load_table as _lt
 
     ev = _lt(spark, sf_dir, "events")
-    path = _tempfile.mkdtemp(prefix="mr_stream_update_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_stream_update_", ignore_cleanup_errors=True
+    ) as path:
         ev.repartition(4, "event_id").write.mode("overwrite").parquet(path)
         schema = spark.read.parquet(path).schema
         src = normalize_events(
@@ -1121,8 +1113,6 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("total_cents").cast("long").alias("total_cents"),
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -21,20 +21,19 @@ streaming rows):
 from __future__ import annotations
 
 import math
-import shutil
 import tempfile
 import time
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import LongType
 
-from mapreduce_6_824_lab1_spark.catalog import configure
+from mapreduce_6_824_lab1_spark.catalog import configure, load_table
 from mapreduce_6_824_lab1_spark.protobuf_compat import ensure_protobuf
 from mapreduce_6_824_lab1_spark.operators.temporal import (
     SESSION_GAP_MIN,
@@ -44,13 +43,14 @@ from mapreduce_6_824_lab1_spark.registry import query
 from mapreduce_6_824_lab1_spark.streaming.jobs import (
     WATERMARK_DELAY_MIN,
     _events_stream,
+    _file_stream,
     _run_to_parquet,
     _stage_event_id_slices,
     _stamp_mtime,
 )
 
-# transformWithState rejects the default HDFS-backed state store; every
-# TWS key scopes the RocksDB provider around its own run.
+# transformWithState rejects the default HDFS-backed state store;
+# _run_tws scopes the RocksDB provider around every TWS run.
 _ROCKSDB_CONF = {
     "spark.sql.streaming.stateStore.providerClass":
     "org.apache.spark.sql.execution.streaming.state."
@@ -62,9 +62,11 @@ FLUSH = "__flush__"
 
 # ensure_protobuf() is DEFERRED to first use (round-8 ADVICE: a
 # module-level call mutated sys.path and patched protobuf validation in
-# every process that merely imports the registry, TWS or not). The two
-# processes that genuinely need it still get it before any pb2 import:
-# - the DRIVER: stream_session_tws() calls it at entry (honest gate);
+# every process that merely imports the registry, TWS or not), so TWS
+# key REGISTRATION is never gated on it either. The two processes that
+# genuinely need it still get it before any pb2 import:
+# - the DRIVER: _run_tws() calls it before building the operator, and
+#   raises loudly on a host with no protobuf runtime (honest gate);
 # - every WORKER: each processor pickles via _BootstrappedProcessor's
 #   __reduce__ -> _rebuild_processor, which calls it on UNPICKLE — and
 #   read_single_udf precedes StatefulProcessorApiClient construction
@@ -80,6 +82,9 @@ _OUT_SCHEMA = (
     "user_id long, session_start string, n_events long, total_value double"
 )
 _STATE_SCHEMA = "start long, last long, n long, tot double"
+# the event-id-slice keys stage (and stream back) only these columns
+_SLICE_COLS = ["user_id", "event_type", "value"]
+_SLICE_SCHEMA = "user_id long, event_type string, value double"
 
 
 def _fold_sessions(
@@ -173,13 +178,39 @@ def _events_ts_long_ns(raw: DataFrame) -> DataFrame:
     )
 
 
+def _stage_time_ranges(df: DataFrame, scratch: str) -> None:
+    """Write ``df`` as four ``ts``-quantile ranges, one FILE each
+    (``batch_0``..``batch_3``), mtime-stamped in ascending time order —
+    the staging shared by the two time-ordered sessionizers. Fed one
+    file per micro-batch, open sessions genuinely carry across batch
+    boundaries through state, and an event-time watermark only moves
+    forward (no row is ever late).
+
+    One file per range: a range split across several files would let
+    ``maxFilesPerTrigger`` deliver its rows out of order across batches,
+    breaking the in-order state continuation. The explicit mtime stamp
+    (``_stamp_mtime``) makes batch order a stated fact, not a race."""
+    bounds = df.approxQuantile("ts", [0.25, 0.5, 0.75], 0.0)
+    cuts = [float("-inf"), *bounds, float("inf")]
+    base = int(time.time())
+    for i in range(len(cuts) - 1):
+        part = df.filter(
+            (F.col("ts") > F.lit(cuts[i]))
+            & (F.col("ts") <= F.lit(cuts[i + 1]))
+        )
+        part.coalesce(1).write.mode("overwrite").parquet(
+            f"{scratch}/batch_{i}"
+        )
+        _stamp_mtime(f"{scratch}/batch_{i}", base + 60 * i)
+
+
 def _run_session_stream(spark: SparkSession, sf_dir: str, attach) -> DataFrame:
-    """Shared harness for the two custom-stateful sessionizers: long-ns
-    normalization, per-user flush sentinel, time-ranged batch staging
-    (maxFilesPerTrigger=1 so open sessions genuinely cross micro-batch
-    boundaries through state), file-sink drain (session-grain output —
-    see the sink-grain ruling in jobs.py), scratch detach. ``attach``
-    maps the raw source stream to the sessionized stream."""
+    """Shared harness for the two flush-closed sessionizers: long-ns
+    normalization, per-user flush sentinel (it rides in the final, latest
+    time range), time-ranged batch staging (:func:`_stage_time_ranges`),
+    scratch detach. ``attach`` maps the staged source stream to the
+    DRAINED sessions — session-grain output goes through the file sink,
+    never a driver collect (see the sink-grain ruling in jobs.py)."""
     configure(spark)
     raw = _events_ts_long_ns(spark.read.parquet(f"{sf_dir}/events.parquet"))
     sentinel = (
@@ -195,44 +226,14 @@ def _run_session_stream(spark: SparkSession, sf_dir: str, attach) -> DataFrame:
             F.lit("{}").alias("props"),
         )
     )
-    scratch = tempfile.mkdtemp(prefix="mr_spark_sess_")
-    try:
-        # Split the input into N_BATCH_FILES time-ranged files written in
-        # ascending mtime order and feed them one per micro-batch
-        # (maxFilesPerTrigger=1): open sessions genuinely carry across batch
-        # boundaries through the GroupState, not just within one pandas
-        # frame. The flush sentinel rides in the final (latest) range.
-        full = raw.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        ).unionByName(sentinel)
-        bounds = full.approxQuantile("ts", [0.25, 0.5, 0.75], 0.0)
-        cuts = [float("-inf"), *bounds, float("inf")]
-        base = int(time.time())
-        for i in range(len(cuts) - 1):
-            part = full.filter(
-                (F.col("ts") > F.lit(cuts[i]))
-                & (F.col("ts") <= F.lit(cuts[i + 1]))
-            )
-            # one file per range: a range split across several files would
-            # let maxFilesPerTrigger deliver a range's rows out of order
-            # across batches, breaking the in-order state continuation
-            part.coalesce(1).write.mode("overwrite").parquet(
-                f"{scratch}/batch_{i}"
-            )
-            # explicit mtime stamp => deterministic file (= batch) order;
-            # replaces the former time.sleep(0.05) race (_stamp_mtime doc)
-            _stamp_mtime(f"{scratch}/batch_{i}", base + 60 * i)
-        src = (
-            spark.readStream.schema(_RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(scratch)
-        )
-        sessions = attach(src)
-        # session-grain output: file-sink detach, never a driver collect
-        return _run_to_parquet(sessions, spark)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    full = raw.select(
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    ).unionByName(sentinel)
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_sess_", ignore_cleanup_errors=True
+    ) as scratch:
+        _stage_time_ranges(full, scratch)
+        return attach(_file_stream(spark, _RAW_SCHEMA, scratch))
 
 
 @query("stream_session_stateful", oracle=SESSION_ORACLE)
@@ -242,13 +243,14 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_fold_sessions`, shared with ``stream_session_tws``."""
 
     def attach(src: DataFrame) -> DataFrame:
-        return src.groupBy("user_id").applyInPandasWithState(
+        sessions = src.groupBy("user_id").applyInPandasWithState(
             _sessionize,
             outputStructType=_OUT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        return _run_to_parquet(sessions, spark)
 
     return _run_session_stream(spark, sf_dir, attach)
 
@@ -299,6 +301,38 @@ class _BootstrappedProcessor(StatefulProcessor):
         pass
 
 
+def _run_tws(
+    spark: SparkSession,
+    src: DataFrame,
+    processor: _BootstrappedProcessor,
+    out_schema: str,
+    time_mode: str = "none",
+    initial_state: GroupedData | None = None,
+) -> DataFrame:
+    """Per-user ``transformWithStateInPandas`` over ``src``, drained
+    through the parquet file sink (every TWS key's output scales with
+    users — the sink-grain ruling in jobs.py) under the RocksDB state
+    store provider transformWithState requires. Holds the driver's one
+    protobuf gate: no runtime, no silent fallback — it fails loudly
+    before the query starts."""
+    from mapreduce_6_824_lab1_spark.session import scoped_conf
+
+    if not ensure_protobuf():
+        raise RuntimeError(
+            f"{type(processor).__name__} needs a protobuf runtime "
+            "(protobuf_compat.ensure_protobuf found none)"
+        )
+    out = src.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=processor,
+        outputStructType=out_schema,
+        outputMode="append",
+        timeMode=time_mode,
+        initialState=initial_state,
+    )
+    with scoped_conf(spark, _ROCKSDB_CONF):
+        return _run_to_parquet(out, spark)
+
+
 class _SessionProcessor(_BootstrappedProcessor):
     """transformWithStateInPandas processor around :func:`_fold_sessions`."""
 
@@ -338,9 +372,7 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     here — proven against the GroupState twin on real multi-batch
     streams in tests/test_round7.py — and additionally requires the
     RocksDB state store provider (transformWithState rejects the
-    default HDFS-backed provider), which the function scopes itself.
-    Registered round 8 (the registry freeze lifted when the
-    CORRECTNESS union closed at 264/264).
+    default HDFS-backed provider), which :func:`_run_tws` scopes.
 
     Bench placement (round-8 verdict ask #8): sim/scale tier, NOT the
     sf0.1 bench — precedent: no stream_* key is benched; bench.py times
@@ -350,24 +382,11 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys. Its performance evidence is the SCALING_r07/r08 sweep rows
     (sf0.1/1/10 = 21.9/36.2/248.4 s) and the streaming throughput smoke.
     """
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
-
-    if not ensure_protobuf():  # honest gate: no runtime, no silent fallback
-        raise RuntimeError(
-            "stream_session_tws needs a protobuf runtime "
-            "(protobuf_compat.ensure_protobuf found none)"
-        )
-
-    def attach(src: DataFrame) -> DataFrame:
-        return src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_SessionProcessor(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-
-    with scoped_conf(spark, _ROCKSDB_CONF):
-        return _run_session_stream(spark, sf_dir, attach)
+    return _run_session_stream(
+        spark,
+        sf_dir,
+        lambda src: _run_tws(spark, src, _SessionProcessor(), _OUT_SCHEMA),
+    )
 
 
 @query(
@@ -423,15 +442,6 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sink.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-# Round-6/7 history: registration was held behind a `_REGISTER_TWS`
-# freeze flag until the CORRECTNESS union closed at 264/264 (round 7);
-# round 8 registered the key directly above. Registration is NOT gated
-# on ensure_protobuf() at import (that would reintroduce the
-# import-time sys.path mutation the deferred design removed) — the
-# runtime gate lives inside the function and raises loudly on hosts
-# with no protobuf runtime.
-
-
 # ---------------------------------------------------------------------------
 # transformWithState MapState: per-user per-type running aggregates
 # ---------------------------------------------------------------------------
@@ -475,19 +485,15 @@ class _TypeCountProcessor(_BootstrappedProcessor):
     update-mode changelog shape). State is one map entry per
     (user, type) — domain-bounded per user, never per-event.
 
-    Reads are per-entry POINT OPS (``getValue`` per touched type — the
-    canonical MapState exercise this key exists to demonstrate); the
-    measured alternative replaces the reads with one ``iterator()``
-    scan. A/B-measured round 9 (evidence/archive/SCALING_r09.md): at
-    sf1 WARM the iterator read is a ~7.5% wall-clock saving (medians
-    39.1 vs 42.2 s over 3 alternating reps, identical row-level results) —
-    round-trip COUNT is roughly halved (the r08 estimate), but at sf1
-    wall-clock is dominated by Arrow/RocksDB/staging, so the traffic
-    cut doesn't convert 1:1; cold/short sessions show the large effect
-    (69 vs 41 s cold reps). The point-op form stays registered because
-    the key exists to exercise the point primitives; the iterator read
-    does registered work in ``stream_bootstrap_counts_tws``'s flush,
-    where scanning the WHOLE map is unambiguously right."""
+    Per (user, batch) the map is READ ONCE — one ``iterator()`` scan
+    into a dict — and WRITTEN per touched type (``updateValue`` point
+    ops): T + 1 protobuf round-trips for T touched types, where a
+    ``getValue`` point read per type cost 2T, and each first-seen type's
+    point read was a miss the JVM state server logs as a WARN. The
+    iterator read is the one the round-9 A/B measured cheaper
+    (evidence/archive/SCALING_r09.md: at sf1 WARM a ~7.5% wall-clock
+    saving, medians 39.1 vs 42.2 s over 3 alternating reps, identical
+    row-level results; cold/short sessions 69 vs 41 s)."""
 
     def init(self, handle) -> None:
         self._counts = handle.getMapState(
@@ -511,12 +517,11 @@ class _TypeCountProcessor(_BootstrappedProcessor):
             .groupby("et")["c"]
             .agg(["count", "sum"])
         )
+        prior = {k[0]: v for k, v in self._counts.iterator()}
         out = []
         for et, row in agg.iterrows():
-            # point read: one protobuf round-trip per touched type
-            val = self._counts.getValue((et,))
-            n0, t0 = (0, 0) if val is None else (int(val[0]), int(val[1]))
-            n, t = n0 + int(row["count"]), t0 + int(row["sum"])
+            n0, t0 = prior.get(et, (0, 0))
+            n, t = int(n0) + int(row["count"]), int(t0) + int(row["sum"])
             self._counts.updateValue((et,), (n, t))
             out.append((et, n, t))
         return out
@@ -532,9 +537,10 @@ def stream_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user per-event-type running (count, exact-cents sum) on
     transformWithState **MapState** — the state primitive
     ``stream_session_tws`` (ValueState) does not exercise: one map
-    entry per event type under each user key, point-read/point-updated
-    per batch (``getValue``/``updateValue`` round-trip the protobuf
-    state client per touched entry, not per event).
+    entry per event type under each user key, read with one
+    ``iterator()`` scan and point-updated (``updateValue``) per touched
+    entry each batch — protobuf state-client traffic scales with touched
+    entries, not events.
 
     The input is staged as four event-id slices fed one per trigger
     (``maxFilesPerTrigger=1``), so the running aggregates genuinely
@@ -563,39 +569,17 @@ def stream_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged-slice harness + downstream max-struct fold around
     :class:`_TypeCountProcessor`."""
-    from mapreduce_6_824_lab1_spark.catalog import load_table
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
-
-    if not ensure_protobuf():  # honest gate, same as stream_session_tws
-        raise RuntimeError(
-            "stream_type_counts_tws needs a protobuf runtime "
-            "(protobuf_compat.ensure_protobuf found none)"
-        )
-    configure(spark)
     ev = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="mr_spark_typecnt_in_")
-    try:
-        _stage_event_id_slices(
-            ev, scratch, keep_cols=["user_id", "event_type", "value"]
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_typecnt_in_", ignore_cleanup_errors=True
+    ) as scratch:
+        _stage_event_id_slices(ev, scratch, keep_cols=_SLICE_COLS)
+        sink = _run_tws(
+            spark,
+            _file_stream(spark, _SLICE_SCHEMA, scratch),
+            _TypeCountProcessor(),
+            _TYPE_OUT_SCHEMA,
         )
-        src = (
-            spark.readStream.schema(
-                "user_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(scratch)
-        )
-        counts = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_TypeCountProcessor(),
-            outputStructType=_TYPE_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-        with scoped_conf(spark, _ROCKSDB_CONF):
-            sink = _run_to_parquet(counts, spark)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return (
         sink.groupBy("user_id", "event_type")
         .agg(F.max(F.struct("cnt", "total_cents")).alias("m"))
@@ -702,45 +686,23 @@ def stream_user_median_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     list for a mergeable quantile sketch (KLL/t-digest) in ValueState;
     this key demonstrates the exact-list primitive and says so).
     """
-    from mapreduce_6_824_lab1_spark.catalog import load_table
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
-
-    if not ensure_protobuf():  # honest gate, same as the TWS siblings
-        raise RuntimeError(
-            "stream_user_median_tws needs a protobuf runtime "
-            "(protobuf_compat.ensure_protobuf found none)"
-        )
-    configure(spark)
     ev = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="mr_spark_median_in_")
-    try:
-        _stage_event_id_slices(
-            ev, scratch, keep_cols=["user_id", "event_type", "value"]
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_median_in_", ignore_cleanup_errors=True
+    ) as scratch:
+        _stage_event_id_slices(ev, scratch, keep_cols=_SLICE_COLS)
         # slice order is irrelevant (appends commute); only the flush
         # file must sort LAST so the sentinel batch is final — explicit
         # stamp, not a sleep (round-8 ADVICE: timing-based ordering
         # could deliver the flush mid-stream on a coarse-mtime
         # filesystem, dropping a slice from every user's median)
         _stage_flush_sentinel(ev, scratch)
-        src = (
-            spark.readStream.schema(
-                "user_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(scratch)
+        return _run_tws(
+            spark,
+            _file_stream(spark, _SLICE_SCHEMA, scratch),
+            _MedianProcessor(),
+            _MEDIAN_OUT_SCHEMA,
         )
-        medians = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_MedianProcessor(),
-            outputStructType=_MEDIAN_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-        with scoped_conf(spark, _ROCKSDB_CONF):
-            return _run_to_parquet(medians, spark)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -755,7 +717,7 @@ class _BootstrapTypeCountProcessor(_TypeCountProcessor):
     the INHERITED :meth:`_TypeCountProcessor._accumulate` (one copy of
     the cents/accumulate convention); a per-user flush sentinel in the
     last batch emits the final map via ONE ``iterator()`` scan — the
-    read lever the round-9 A/B measured, here doing registered work.
+    same read ``_accumulate`` makes, which the round-9 A/B measured.
 
     Emission is flush-only (one row per (user, type)), so the sink IS
     the result — no downstream fold. Cross-batch AND cross-seed carry
@@ -804,8 +766,8 @@ def stream_bootstrap_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     4`` (the id subspace is pre-filtered, so the default residue
     slicing would leave half the batches empty) plus a per-user flush
     sentinel. The flush emits each user's final map via one
-    ``iterator()`` scan (the A/B-measured read lever in registered
-    use) — one row per (user, type), so the file sink IS the result.
+    ``iterator()`` scan — one row per (user, type), so the file sink
+    IS the result.
 
     The oracle is the plain FULL-events batch aggregate
     (``TYPE_COUNTS_ORACLE``, same as ``stream_type_counts_tws``):
@@ -821,15 +783,6 @@ def stream_bootstrap_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries; the flush scan is one round-trip per user — this key plus
     ``stream_type_counts_tws`` together demonstrate both the changelog
     (emit-per-touch) and snapshot (emit-at-flush) output shapes."""
-    from mapreduce_6_824_lab1_spark.catalog import load_table
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
-
-    if not ensure_protobuf():  # honest gate, same as the TWS siblings
-        raise RuntimeError(
-            "stream_bootstrap_counts_tws needs a protobuf runtime "
-            "(protobuf_compat.ensure_protobuf found none)"
-        )
-    configure(spark)
     ev = load_table(spark, sf_dir, "events")
     seed = ev.filter(F.pmod("event_id", F.lit(2)) == 0)
     live = ev.filter(F.pmod("event_id", F.lit(2)) == 1)
@@ -843,12 +796,13 @@ def stream_bootstrap_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
     )
-    scratch = tempfile.mkdtemp(prefix="mr_spark_bootcnt_in_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_bootcnt_in_", ignore_cleanup_errors=True
+    ) as scratch:
         _stage_event_id_slices(
             live,
             scratch,
-            keep_cols=["user_id", "event_type", "value"],
+            keep_cols=_SLICE_COLS,
             slice_col=F.pmod(
                 F.floor(F.col("event_id") / F.lit(2)).cast("long"),
                 F.lit(4),
@@ -857,25 +811,13 @@ def stream_bootstrap_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         # flush covers ALL users (seed ∪ live), so seed-only users
         # still emit their map even if the live half never touches them
         _stage_flush_sentinel(ev, scratch)
-        src = (
-            spark.readStream.schema(
-                "user_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(scratch)
+        return _run_tws(
+            spark,
+            _file_stream(spark, _SLICE_SCHEMA, scratch),
+            _BootstrapTypeCountProcessor(),
+            _TYPE_OUT_SCHEMA,
+            initial_state=initial,
         )
-        counts = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_BootstrapTypeCountProcessor(),
-            outputStructType=_TYPE_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-            initialState=initial,
-        )
-        with scoped_conf(spark, _ROCKSDB_CONF):
-            return _run_to_parquet(counts, spark)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -885,6 +827,7 @@ def stream_bootstrap_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SENTINEL_USER = -1
 _TIMER_WM_DELAY_MIN = 1
 _TIMER_WM_DELAY = f"{_TIMER_WM_DELAY_MIN} minutes"
+_TIMER_SCHEMA = "ts long, user_id long, event_type string, value double"
 
 
 def _session_timer_ms(last_ns: int) -> int:
@@ -934,7 +877,11 @@ class _TimerSessionProcessor(_BootstrappedProcessor):
         assert new_state is not None
         self._state.update(new_state)
         self._handle.registerTimer(_session_timer_ms(int(new_state[1])))
-        yield _sessions_frame(out)
+        # the harness's watermark sentinels are events to the fold but
+        # never output rows; a sentinel's own timer (last + gap) always
+        # lies past the final watermark (max ts - delay), so it never
+        # fires and handleExpiredTimer never emits one either
+        yield _sessions_frame([] if user_id == _SENTINEL_USER else out)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
         (user_id,) = key
@@ -976,7 +923,7 @@ def stream_session_timers_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
       that is a conf-dependent rescue, so the registered form keeps
       the second sentinel and is deterministic BY CONSTRUCTION under
       either setting. The sentinel user's own state dies with the
-      query and is filtered from the output.
+      query, and the processor never emits its sessions.
 
     Correctness of early fires (why a timer can never split a session
     the batch oracle would merge): a timer for a session with last
@@ -1008,79 +955,40 @@ def _run_timer_sessions(
     — one sentinel is already complete on builds where
     noDataMicroBatches runs the final empty batch; see the key's
     docstring for the measured breakdown)."""
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
-
-    if not ensure_protobuf():  # honest gate, same as the TWS siblings
-        raise RuntimeError(
-            "stream_session_timers_tws needs a protobuf runtime "
-            "(protobuf_compat.ensure_protobuf found none)"
-        )
     configure(spark)
     raw = _events_ts_long_ns(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    cols = ["ts", "user_id", "event_type", "value"]
-    scratch = tempfile.mkdtemp(prefix="mr_spark_timer_sess_")
-    try:
-        base = int(time.time())
-        bounds = raw.approxQuantile("ts", [0.25, 0.5, 0.75], 0.0)
-        cuts = [float("-inf"), *bounds, float("inf")]
-        for i in range(len(cuts) - 1):
-            part = raw.filter(
-                (F.col("ts") > F.lit(cuts[i]))
-                & (F.col("ts") <= F.lit(cuts[i + 1]))
-            ).select(*cols)
-            # one file per time range: in-order watermark advance
-            part.coalesce(1).write.mode("overwrite").parquet(
-                f"{scratch}/batch_{i}"
-            )
-            _stamp_mtime(f"{scratch}/batch_{i}", base + 60 * i)
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_timer_sess_", ignore_cleanup_errors=True
+    ) as scratch:
+        _stage_time_ranges(
+            raw.select("ts", "user_id", "event_type", "value"), scratch
+        )
         max_ts = raw.agg(F.max("ts")).first()[0]
+        base = int(time.time()) + 3600  # sorts after every time range
         # sentinel rows carry a REAL (non-FLUSH) event type: the fold must
         # treat them as events (an open sentinel session + far-future
-        # timer, filtered below), not as a flush that nulls the state
+        # timer, never emitted), not as a flush that nulls the state
         for j, mult in enumerate(range(100, 100 + n_sentinels)):
+            ts = int(max_ts) + mult * GAP_NS
             spark.createDataFrame(
-                [
-                    (
-                        int(max_ts) + mult * GAP_NS,
-                        _SENTINEL_USER,
-                        "__sentinel__",
-                        0.0,
-                    )
-                ],
-                schema="ts long, user_id long, event_type string, "
-                "value double",
+                [(ts, _SENTINEL_USER, "__sentinel__", 0.0)], _TIMER_SCHEMA
             ).coalesce(1).write.mode("overwrite").parquet(
                 f"{scratch}/sentinel_{j}"
             )
-            _stamp_mtime(f"{scratch}/sentinel_{j}", base + 3600 + 60 * j)
+            _stamp_mtime(f"{scratch}/sentinel_{j}", base + 60 * j)
         src = (
-            spark.readStream.schema(
-                "ts long, user_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(scratch)
+            _file_stream(spark, _TIMER_SCHEMA, scratch)
             # event-time timers need a watermark column: ts is long ns,
             # the watermark clock is its µs projection — exact integer
             # division (ts is ~1.7e18 > 2^53, so float division can be
             # off by 1 µs near µs boundaries; `div` stays in longs)
-            .withColumn(
-                "ts_ts",
-                F.timestamp_micros(F.expr("ts div 1000")),
-            )
+            .withColumn("ts_ts", F.timestamp_micros(F.expr("ts div 1000")))
             .withWatermark("ts_ts", _TIMER_WM_DELAY)
         )
-        sessions = (
-            src.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=_TimerSessionProcessor(),
-                outputStructType=_OUT_SCHEMA,
-                outputMode="append",
-                timeMode="eventTime",
-            )
-            .filter(F.col("user_id") != F.lit(_SENTINEL_USER))
+        return _run_tws(
+            spark,
+            src,
+            _TimerSessionProcessor(),
+            _OUT_SCHEMA,
+            time_mode="eventTime",
         )
-        with scoped_conf(spark, _ROCKSDB_CONF):
-            return _run_to_parquet(sessions, spark)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -153,6 +153,60 @@ def test_tws_processor_matches_groupstate_harness():
     assert handle.state.v is None  # flush left no dangling state
 
 
+def test_type_count_processor_reads_map_once_without_misses():
+    """_TypeCountProcessor._accumulate reads each (user, batch) map ONCE
+    through ``iterator()`` and writes touched types with ``updateValue``:
+    T + 1 state round-trips for T touched types. A ``getValue`` on a
+    first-seen type is a miss the JVM state server logs as a WARN, so the
+    fake MapState fails on one."""
+    from mapreduce_6_824_lab1_spark.streaming.stateful import (
+        _TypeCountProcessor,
+    )
+
+    class FakeMapState:
+        def __init__(self):
+            self.m = {}
+            self.calls = []
+
+        def getValue(self, key):
+            self.calls.append("getValue")
+            assert key in self.m, f"getValue miss on {key}"
+            return self.m[key]
+
+        def iterator(self):
+            self.calls.append("iterator")
+            return iter(list(self.m.items()))
+
+        def updateValue(self, key, value):
+            self.calls.append("updateValue")
+            self.m[key] = value
+
+    class FakeHandle:
+        def __init__(self):
+            self.state = FakeMapState()
+
+        def getMapState(self, name, key_schema, value_schema):
+            return self.state
+
+    proc = _TypeCountProcessor()
+    handle = FakeHandle()
+    proc.init(handle)
+    first = pd.DataFrame(
+        {"event_type": ["a", "b", "a"], "value": [1.0, 2.5, 0.25]}
+    )
+    second = pd.DataFrame({"event_type": ["a", "c"], "value": [3.0, 0.1]})
+
+    assert sorted(proc._accumulate(first)) == [("a", 2, 125), ("b", 1, 250)]
+    handle.state.calls.clear()
+    assert sorted(proc._accumulate(second)) == [("a", 3, 425), ("c", 1, 10)]
+    assert handle.state.calls == ["iterator", "updateValue", "updateValue"]
+    assert handle.state.m == {
+        ("a",): (3, 425),
+        ("b",): (1, 250),
+        ("c",): (1, 10),
+    }
+
+
 def test_csv_column_pruning_hides_unreferenced_corruption(spark, tmp_path):
     """Pins the trap source_corrupt_records defends against: when only
     n_chars is referenced, a row with a poisoned doc_id parses as GOOD

@@ -93,6 +93,55 @@ def test_staged_slices_are_mtime_ordered_and_flush_sorts_last(
     )
 
 
+def test_time_ranged_staging_is_ordered_disjoint_and_complete(
+    spark, tmp_path
+):
+    """_stage_time_ranges, the two sessionizers' staging: its parts must
+    be strictly mtime-ordered (= micro-batch order), pairwise disjoint in
+    ``ts`` with time order following mtime order, and together hold every
+    input row exactly once — in-order state carry across batches and a
+    forward-only watermark both ride on it."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_6_824_lab1_spark.streaming.stateful import (
+        _events_ts_long_ns,
+        _stage_time_ranges,
+    )
+    from tests.conftest import SF_DIR
+
+    raw = _events_ts_long_ns(
+        spark.read.parquet(f"{SF_DIR}/events.parquet")
+    ).select("ts", "user_id", "event_type", "value")
+    scratch = tmp_path / "ranges"
+    _stage_time_ranges(raw, str(scratch))
+
+    def mtimes(part):
+        files = list(part.rglob("*"))
+        assert files
+        return [os.stat(p).st_mtime for p in files]
+
+    parts = sorted(scratch.iterdir(), key=lambda d: min(mtimes(d)))
+    assert len(parts) == 4
+    for earlier, later in zip(parts, parts[1:]):
+        assert max(mtimes(earlier)) < min(mtimes(later)), (
+            "time-range parts must be strictly mtime-ordered"
+        )
+
+    spans, total = [], 0
+    for part in parts:
+        lo, hi, n = (
+            spark.read.parquet(str(part))
+            .agg(F.min("ts"), F.max("ts"), F.count(F.lit(1)))
+            .first()
+        )
+        assert n > 0, f"{part.name} is empty"
+        spans.append((lo, hi))
+        total += n
+    for (_, hi), (lo, _) in zip(spans, spans[1:]):
+        assert hi < lo, f"ts ranges overlap or run against mtime: {spans}"
+    assert total == raw.count()
+
+
 def test_no_sleep_based_staging_left_in_streaming_package():
     """The race class is eradicated, not just patched at two sites: no
     ``time.sleep`` CALL remains anywhere in the streaming package source
