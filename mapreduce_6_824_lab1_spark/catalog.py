@@ -84,6 +84,32 @@ def load_tables(
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
+def detach(df: DataFrame) -> DataFrame:
+    """Collect a small result and rebuild it as a driver-held local table.
+
+    Queries that stage scratch files (round-trips, sinks, file-staged
+    streams) or scratch tables drop them before returning, so the returned
+    frame must not reference the deleted files: it is collected here while
+    they still exist. Iterative operators use the same cut to truncate
+    lineage at a round boundary.
+
+    The rows stay on the JVM (``collectAsList`` into a ``LocalRelation``),
+    so the result plans as ``LocalTableScan``. ``spark.createDataFrame(
+    df.collect(), df.schema)`` would instead pickle the rows through Python
+    and re-parallelize them as a Python RDD (``Scan ExistingRDD``): every
+    later action then runs ``defaultParallelism`` Python worker tasks to
+    unpickle a dozen rows. Blocks are not kept on executors either (unlike
+    ``localCheckpoint``), so losing a worker cannot lose the result.
+
+    Only for result-grain frames: every row passes through the driver.
+    """
+    spark, jdf = df.sparkSession, df._jdf
+    local = spark._jsparkSession.createDataFrame(
+        jdf.collectAsList(), jdf.schema()
+    )
+    return DataFrame(local, spark)
+
+
 def fan_out(df: DataFrame, spark: SparkSession | None = None) -> DataFrame:
     """Round-robin-repartition an UNDER-SPLIT scan up to the cluster's
     default parallelism before CPU-heavy map work (shingling, tokenizing,

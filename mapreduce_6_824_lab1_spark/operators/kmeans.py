@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from mapreduce_6_824_lab1_spark.catalog import load_table
+from mapreduce_6_824_lab1_spark.catalog import detach, load_table
 from mapreduce_6_824_lab1_spark.functions.numeric import hround
 from mapreduce_6_824_lab1_spark.registry import query
 
@@ -161,13 +161,9 @@ def _kmeans_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docstring promises). Rebuilding the frame from rows truncates the
     # lineage, so iteration N never re-executes iterations 1..N-1 and the
     # final plan's TWO uses of `centroids` (assign + the norm join) read
-    # a literal, not a nested iterative plan.
+    # a local table, not a nested iterative plan.
     for _ in range(ITERATIONS):
-        assigned = assign(vectors, centroids)
-        centroids = spark.createDataFrame(
-            recompute(assigned).collect(),
-            "cid int, centroid array<double>",
-        )
+        centroids = detach(recompute(assign(vectors, centroids)))
     final = assign(vectors, centroids)
     norm = F.sqrt(
         F.aggregate(

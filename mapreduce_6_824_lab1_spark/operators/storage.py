@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_6_824_lab1_spark.catalog import load_table, load_tables
+from mapreduce_6_824_lab1_spark.catalog import detach, load_table, load_tables
 from mapreduce_6_824_lab1_spark.functions.numeric import (
     cents_sum,
     hround,
@@ -110,7 +110,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix = uuid.uuid4().hex[:8]
     try:
         out = bucketed_join_frame(spark, sf_dir, scratch, suffix)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         for name in (
             f"mr_bucketed_lineitem_{suffix}",
@@ -155,8 +155,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             hround(F.sum("o_totalprice"), 2).alias("revenue"),
         )
-        # detach from the scratch dir so it can be removed before returning
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -217,7 +216,7 @@ def similarity_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("cosine"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -348,7 +347,7 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cents_sum("o_totalprice").alias("revenue"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -528,7 +527,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value_cents"),
             F.count_distinct("user_id").alias("n_users"),
         )
-        return spark.createDataFrame(audit.collect(), audit.schema)
+        return detach(audit)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from mapreduce_6_824_lab1_spark.catalog import detach
 from mapreduce_6_824_lab1_spark.registry import query
 
 COUNTER_N = 10_000
@@ -209,6 +210,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("cnt"),
             F.sum("squared").alias("sum_squared"),
         )
-        return spark.createDataFrame(audit.collect(), audit.schema)
+        return detach(audit)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_6_824_lab1_spark.catalog import load_table
+from mapreduce_6_824_lab1_spark.catalog import detach, load_table
 from mapreduce_6_824_lab1_spark.functions.numeric import sql_hround
 from mapreduce_6_824_lab1_spark.registry import query
 
@@ -66,9 +66,7 @@ def source_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(path)
         )
         out = _doc_agg(back)
-        # materialize before the scratch dir is removed; the returned frame
-        # must not reference the deleted files
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -83,7 +81,7 @@ def source_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, text string, lang string, source string, n_chars long"
         ).json(path)
         out = _doc_agg(back)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -101,7 +99,7 @@ def source_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.write.mode("overwrite").orc(path)
         back = spark.read.orc(path)
         out = _doc_agg(back)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -129,7 +127,7 @@ def source_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.size(F.split("value", " "))).alias("n_words"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -178,7 +176,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_missing_chars"),
             F.sum(F.coalesce("n_chars", F.lit(0))).alias("total_chars"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -211,7 +209,7 @@ def source_roundtrip_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(path)
         )
         out = _doc_agg(back)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -292,7 +290,7 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             _gsum(F.length("text")).alias("total_text_len"),
             _gsum(F.length("source")).alias("total_src_len"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -353,7 +351,7 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("bytes").cast("long").alias("total_bytes"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -401,7 +399,7 @@ def sink_dynamic_partition_overwrite(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -452,7 +450,7 @@ def sink_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 agg(spark.read.parquet(path))
                 .select(F.lit(codec).alias("codec"), "n_docs", "checksum")
             )
-            a = spark.createDataFrame(a.collect(), a.schema)
+            a = detach(a)
             out = a if out is None else out.unionByName(a)
         finally:
             shutil.rmtree(path, ignore_errors=True)
@@ -518,6 +516,6 @@ def source_corrupt_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             _gsum(F.length("text")).alias("total_text_len"),
             _gsum(F.length("source")).alias("total_src_len"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)

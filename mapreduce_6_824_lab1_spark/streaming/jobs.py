@@ -33,7 +33,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from mapreduce_6_824_lab1_spark.catalog import configure, normalize_events
+from mapreduce_6_824_lab1_spark.catalog import (
+    configure,
+    detach,
+    normalize_events,
+)
 from mapreduce_6_824_lab1_spark.operators.temporal import (
     TS_FMT_SPARK,
     TUMBLING_ORACLE,
@@ -441,8 +445,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("cnt"),
             hround(F.sum("value"), 2).alias("total_value"),
         )
-        # detach from the scratch files before they are removed
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
 
 
 # ---------------------------------------------------------------------------
@@ -496,9 +499,7 @@ def stream_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
             hround(F.avg("value"), 2).alias("avg_value"),
         )
         out = _run_to_memory(agg, spark, mode="complete")
-        # memory sink rows are session-resident; force materialization
-        # before the scratch input disappears
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
 
 
 @query(
@@ -833,7 +834,7 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
             ).alias("value_cents"),
         )
-        return spark.createDataFrame(audit.collect(), audit.schema)
+        return detach(audit)
 
 
 # ---------------------------------------------------------------------------
@@ -948,7 +949,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_from_delta"),
         )
-        return spark.createDataFrame(audit.collect(), audit.schema)
+        return detach(audit)
 
 
 # ---------------------------------------------------------------------------
@@ -1112,7 +1113,7 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("cnt").cast("long").alias("cnt"),
             F.max("total_cents").cast("long").alias("total_cents"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return detach(out)
 
 
 # ---------------------------------------------------------------------------
