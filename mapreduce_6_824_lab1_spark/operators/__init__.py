@@ -3,7 +3,6 @@
 import mapreduce_6_824_lab1_spark.operators.text  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.mapreduce  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.relational  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.relational2  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.temporal  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.dedup  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.similarity  # noqa: F401
@@ -15,13 +14,7 @@ import mapreduce_6_824_lab1_spark.operators.udaf  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.kmeans  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.graph  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.analytics  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.analytics2  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.analytics3  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.analytics4  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.analytics5  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.pipeline  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.curation  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.curation2  # noqa: F401
-import mapreduce_6_824_lab1_spark.operators.curation3  # noqa: F401
 import mapreduce_6_824_lab1_spark.operators.embeddings  # noqa: F401
 import mapreduce_6_824_lab1_spark.sources  # noqa: F401

@@ -1,7 +1,8 @@
 """Corpus-curation operators (LLM-data-pipeline extension, SURVEY.md §2.C).
 
-Three stages every large-scale pretraining pipeline runs between dedup and
-the trainer, each in its scale-correct Spark formulation:
+The stages every large-scale pretraining pipeline runs between raw crawl,
+dedup and the trainer, each in its scale-correct Spark formulation.
+The first three:
 
 - decontaminate      — drop/flag corpus docs sharing any n-gram with a
                        held-out eval set (broadcast the eval shingles: eval
@@ -14,18 +15,25 @@ the trainer, each in its scale-correct Spark formulation:
                        rebalancing) in ONE corpus scan, deterministic and
                        engine-portable unlike ``df.sampleBy``
 
-All three are pure built-in-function plans — no Python in any hot path.
+The family also holds Bloom-filter decontamination, quantile quality
+filters, incremental dedup, PII masking, feature assembly and bucketizing
+and table profiles; the statistics that gate admission (LM quality score, chunk
+dedup, source mixing, shard assignment, sliding chunks); and the
+measurements a run takes before tokenizer/trainer handoff (vocabulary
+coverage, duplicate substrings, exact-k sampling, BPE merge training). Each
+key's section comment gives its design.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.window import Window
 
 from mapreduce_6_824_lab1_spark.catalog import load_table
-from mapreduce_6_824_lab1_spark.functions.numeric import hround
-from mapreduce_6_824_lab1_spark.functions.text import tokens_col
+from mapreduce_6_824_lab1_spark.functions.numeric import hround, sql_hround
+from mapreduce_6_824_lab1_spark.functions.text import SQL_TOKENS, tokens_col
 from mapreduce_6_824_lab1_spark.operators.dedup import (
     _SHINGLES_FROM_TOKS,
     _SHINGLES_SQL,
@@ -706,4 +714,830 @@ def feature_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             hround(F.avg("o_totalprice"), 2).alias("avg_price"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Corpus statistics that gate admission (lineage: the published CCNet / C4 /
+# Gopher data pipelines). Engine-parity design notes shared by the LM score,
+# chunk dedup, mixing and sharding keys below:
+# - word probabilities are quantized to integer MICRO-nats per word
+#   (floor(-ln(p)·1e6 + 0.5)) BEFORE summation, so document scores are sums
+#   of exact integers — order-insensitive across engines, same pattern as
+#   the integer-cents money sums (sql_tpch_q11, stream_topk_complete);
+# - first-occurrence ownership uses min(doc_id·1e6 + chunk_id) — an exact
+#   BIGINT min, not a min-by over floats;
+# - sampling/sharding reuse the pinned Knuth multiplicative hash
+#   (text_analysis._KNUTH/_MOD) that sample_split/sample_stratified already
+#   share with their oracles.
+# ---------------------------------------------------------------------------
+
+
+# ---------------------------------------------------------------------------
+# Unigram LM quality scoring
+#
+# CCNet-style: train the LM on the corpus in one aggregate pass, score every
+# document by its mean per-word negative log-likelihood. Degenerate/boilerplate
+# docs score low (all high-frequency words), gibberish scores high.
+# ---------------------------------------------------------------------------
+
+LM_QUANT = 1_000_000  # micro-nats per word: integer, order-insensitive sums
+
+QUALITY_LM_ORACLE = f"""
+WITH words AS (
+    SELECT doc_id, lang, unnest({SQL_TOKENS}) AS word FROM documents
+),
+wc AS (SELECT word, count(*) AS cnt FROM words GROUP BY word),
+tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n FROM wc),
+vocab AS (
+    SELECT word,
+           CAST(floor(ln(tot.n / cnt) * {LM_QUANT} + 0.5) AS BIGINT)
+               AS nll_micro
+    FROM wc CROSS JOIN tot
+),
+per_doc AS (
+    SELECT w.doc_id, w.lang,
+           CAST(floor(CAST(sum(v.nll_micro) AS DOUBLE) / count(*)) AS BIGINT)
+               AS doc_nll_micro
+    FROM words w JOIN vocab v USING (word)
+    GROUP BY w.doc_id, w.lang
+)
+SELECT lang,
+       count(*) AS n_docs,
+       {sql_hround(f"CAST(sum(doc_nll_micro) AS DOUBLE) / count(*) / {LM_QUANT}", 4)}
+           AS avg_word_nll,
+       CAST(max(doc_nll_micro) AS BIGINT) AS max_doc_nll_micro,
+       CAST(min(doc_nll_micro) AS BIGINT) AS min_doc_nll_micro
+FROM per_doc
+GROUP BY lang
+"""
+
+
+@query("quality_lm_score", oracle=QUALITY_LM_ORACLE)
+def quality_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language unigram-LM negative-log-likelihood statistics.
+
+    The LM is the corpus itself (one wordcount pass; vocabulary-sized
+    result, broadcast to the scorer). Per-word -ln p(w) is quantized to
+    integer micro-nats BEFORE summing so per-document scores are exact
+    integer sums — no float accumulation-order divergence between engines.
+    Residual parity risk: ln() may differ by 1 ulp across libm
+    implementations, which flips the micro-nat only if ln(total/cnt)·1e6
+    lands within ~1e-10 of a .5 boundary — the same accepted boundary
+    class as hround (pinned green at sf0.001/0.01/0.1).
+    100 TB: vocab table is tiny (≤ a few M rows) → broadcast join; the
+    scorer is one explode + one partial-agg shuffle on doc_id; per-lang
+    rollup is a second |langs|-row aggregate.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    words = docs.select(
+        "doc_id", "lang", F.explode(tokens_col("text")).alias("word")
+    )
+    # total word count derives from the vocabulary aggregate (sum of per-
+    # word counts) — no third corpus scan just for the denominator
+    counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    total = counts.agg(F.sum("cnt").cast("double").alias("total"))
+    vocab = counts.crossJoin(broadcast(total)).select(
+        "word",
+        F.floor(
+            F.log(F.col("total") / F.col("cnt")) * LM_QUANT + F.lit(0.5)
+        )
+        .cast("long")
+        .alias("nll_micro"),
+    )
+    per_doc = (
+        words.join(broadcast(vocab), "word")
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.floor(
+                F.sum("nll_micro").cast("double") / F.count(F.lit(1))
+            )
+            .cast("long")
+            .alias("doc_nll_micro")
+        )
+    )
+    return per_doc.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        hround(
+            F.sum("doc_nll_micro").cast("double")
+            / F.count(F.lit(1))
+            / LM_QUANT,
+            4,
+        ).alias("avg_word_nll"),
+        F.max("doc_nll_micro").alias("max_doc_nll_micro"),
+        F.min("doc_nll_micro").alias("min_doc_nll_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Chunk-level (C4-style) dedup
+#
+# C4-style: every 3-token chunk is kept only at its first corpus occurrence;
+# per-document retention stats.
+# ---------------------------------------------------------------------------
+
+CHUNK_TOKENS = 3  # fixture vocabulary is 31 words — 3-token chunks give a
+#                   real (~19%) duplicate rate; production uses sentences
+
+# chunk ownership = min(doc_id) per distinct chunk: an exact BIGINT min
+# with no positional encoding (an earlier doc_id*1e6+chunk_id key silently
+# overflowed for 3M-token documents); position within the owning doc is
+# irrelevant for doc-level retention counts
+
+
+def chunk_frame(toks: DataFrame) -> DataFrame:
+    """(doc_id, toks) → (doc_id, chunk_id, chunk): fixed-size token chunks,
+    the final chunk partial. explode(sequence)+slice — map-only, no UDF.
+
+    Empty arrays yield ZERO rows (matching the oracle's range(0, 0)):
+    Spark's sequence(0, -1) would step backwards and emit [0, -1], so the
+    id list is guarded to an empty array, which explode drops."""
+    n_chunks = F.ceil(F.size("toks") / F.lit(CHUNK_TOKENS)).cast("long")
+    ids = F.when(
+        n_chunks > 0, F.sequence(F.lit(0).cast("long"), n_chunks - 1)
+    ).otherwise(F.array().cast("array<long>"))
+    return toks.select(
+        "doc_id",
+        F.explode(ids).alias("chunk_id"),
+        "toks",
+    ).select(
+        "doc_id",
+        "chunk_id",
+        F.array_join(
+            F.slice(
+                "toks",
+                (F.col("chunk_id") * CHUNK_TOKENS + 1).cast("int"),
+                CHUNK_TOKENS,
+            ),
+            " ",
+        ).alias("chunk"),
+    )
+
+DEDUP_CHUNKS_ORACLE = f"""
+WITH t AS (
+    SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+),
+c AS (
+    SELECT doc_id, toks,
+           unnest(range(0, CAST(ceil(len(toks) / {CHUNK_TOKENS}.0) AS BIGINT)))
+               AS chunk_id
+    FROM t
+),
+ch AS (
+    SELECT doc_id, chunk_id,
+           array_to_string(
+               toks[(chunk_id*{CHUNK_TOKENS}+1):(chunk_id*{CHUNK_TOKENS}+{CHUNK_TOKENS})],
+               ' ') AS chunk
+    FROM c
+),
+owners AS (
+    SELECT chunk, min(doc_id) AS doc_id FROM ch GROUP BY chunk
+),
+kept AS (
+    SELECT doc_id, count(*) AS kept_chunks FROM owners GROUP BY doc_id
+),
+totals AS (
+    SELECT doc_id, count(*) AS n_chunks FROM ch GROUP BY doc_id
+)
+SELECT t.doc_id,
+       t.n_chunks,
+       coalesce(k.kept_chunks, 0) AS kept_chunks,
+       t.n_chunks - coalesce(k.kept_chunks, 0) AS dropped_chunks
+FROM totals t LEFT JOIN kept k ON k.doc_id = t.doc_id
+"""
+
+
+@query("dedup_chunks", oracle=DEDUP_CHUNKS_ORACLE)
+def dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style chunk dedup: each distinct 3-token chunk survives only in
+    its first owning document (lowest doc_id); returns per-document
+    total/kept/dropped chunk counts.
+
+    Scale shape — deliberately NOT a row_number window over chunk text: a
+    boilerplate chunk repeated billions of times would send every copy to
+    one reducer. Instead ownership is min(doc_id) under groupBy(chunk) —
+    an algebraic aggregate with map-side combine, so the hot chunk
+    collapses to one partial per task. Kept counts then come from the
+    DISTINCT-chunk owner table (one row per chunk), never by joining the
+    raw copies back.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", tokens_col("text").alias("toks"))
+    chunks = chunk_frame(toks)
+    owners = chunks.groupBy("chunk").agg(F.min("doc_id").alias("doc_id"))
+    kept = owners.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("kept_chunks")
+    )
+    totals = chunks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_chunks")
+    )
+    return totals.join(kept, "doc_id", "left").select(
+        "doc_id",
+        "n_chunks",
+        F.coalesce("kept_chunks", F.lit(0)).alias("kept_chunks"),
+        (F.col("n_chunks") - F.coalesce("kept_chunks", F.lit(0))).alias(
+            "dropped_chunks"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Source mixing
+#
+# Data mixing: equalize the per-source document mixture to the smallest source
+# via deterministic hash-threshold acceptance (no RNG state, append-stable,
+# map-only after one tiny agg).
+# ---------------------------------------------------------------------------
+
+MIX_ORACLE = f"""
+WITH counts AS (
+    SELECT source, count(*) AS n_total FROM documents GROUP BY source
+),
+m AS (SELECT min(n_total) AS m FROM counts),
+marked AS (
+    SELECT d.source, c.n_total,
+           CASE WHEN (d.doc_id * {_KNUTH}) % {_MOD}
+                     < CAST(floor(CAST(m.m AS DOUBLE) / c.n_total * {_MOD})
+                            AS BIGINT)
+                THEN 1 ELSE 0 END AS kept
+    FROM documents d
+    JOIN counts c USING (source)
+    CROSS JOIN m
+)
+SELECT source,
+       CAST(max(n_total) AS BIGINT) AS n_total,
+       CAST(sum(kept) AS BIGINT) AS n_kept,
+       {sql_hround("CAST(sum(kept) AS DOUBLE) / max(n_total)", 4)} AS kept_frac
+FROM marked
+GROUP BY source
+"""
+
+
+@query("mix_sources_uniform", oracle=MIX_ORACLE)
+def mix_sources_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equalize the source mixture to the smallest source's volume via
+    deterministic hash-threshold acceptance (keep iff
+    knuth(doc_id) < (min_count/count_source)·2³²).
+
+    This is the data-mixing primitive: given target weights (here uniform),
+    admission is a pure function of (document key, acceptance fraction) —
+    no RNG state, no stored sample. Because the rule is a fixed-hash
+    threshold, samples are NESTED: lowering a source's fraction (as the
+    corpus grows around it) always keeps a subset of the previous sample,
+    never an arbitrary reshuffle — the property that keeps incremental
+    pipeline reruns from churning membership. 100 TB: the
+    per-source count table is tiny → broadcast; admission is map-only; the
+    audit is one partial-agg shuffle on source. (Exact-count mixing would
+    need a per-source rank — a windowed shuffle; the hash threshold is the
+    scale-correct approximation, ±O(√n) per source.)
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
+    m = counts.agg(F.min("n_total").alias("m"))
+    marked = (
+        docs.join(broadcast(counts), "source")
+        .crossJoin(broadcast(m))
+        .select(
+            "source",
+            "n_total",
+            F.when(
+                F.pmod(F.col("doc_id") * _KNUTH, F.lit(_MOD))
+                < F.floor(
+                    F.col("m").cast("double") / F.col("n_total") * _MOD
+                ).cast("long"),
+                1,
+            )
+            .otherwise(0)
+            .alias("kept"),
+        )
+    )
+    return marked.groupBy("source").agg(
+        F.max("n_total").alias("n_total"),
+        F.sum("kept").alias("n_kept"),
+        hround(
+            F.sum("kept").cast("double") / F.max("n_total"), 4
+        ).alias("kept_frac"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Shard assignment
+#
+# Deterministic training-shard assignment (hash → shard) with per-shard balance
+# stats; the write side of a shuffled-shard layout.
+# ---------------------------------------------------------------------------
+
+N_SHARDS = 16
+
+SHARD_ORACLE = f"""
+SELECT (d.doc_id * {_KNUTH}) % {_MOD} % {N_SHARDS} AS shard,
+       count(*) AS n_docs,
+       CAST(sum(len({SQL_TOKENS})) AS BIGINT) AS total_tokens,
+       CAST(sum(n_chars) AS BIGINT) AS total_chars,
+       count(DISTINCT lang) AS n_langs
+FROM documents d
+GROUP BY 1
+"""
+
+
+@query("shard_assign", oracle=SHARD_ORACLE)
+def shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic training-shard assignment + balance audit.
+
+    shard = knuth(doc_id) mod 16: the multiplicative hash decorrelates the
+    shard from every natural ordering (crawl time, source, doc length), so
+    shards are statistically interchangeable — the property a trainer's
+    data loader needs. The audit (one partial-agg shuffle) verifies
+    balance; the production write is
+    ``df.repartition(N_SHARDS, shard).write`` — same single shuffle.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(
+            F.pmod(F.pmod(F.col("doc_id") * _KNUTH, F.lit(_MOD)), F.lit(N_SHARDS))
+            .alias("shard"),
+            F.size(tokens_col("text")).cast("long").alias("n_toks"),
+            "n_chars",
+            "lang",
+        )
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_toks").alias("total_tokens"),
+            F.sum("n_chars").alias("total_chars"),
+            F.count_distinct("lang").alias("n_langs"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sliding-window chunking — the RAG/pre-training segmentation primitive:
+# fixed token windows with overlap (stride < window), so no boundary ever
+# splits context that both neighbors need. Complements dedup_chunks'
+# disjoint windows: same explode(sequence)+slice plan, overlapping starts.
+# ---------------------------------------------------------------------------
+
+CHUNK_WINDOW = 6  # tokens per chunk
+CHUNK_STRIDE = 4  # tokens between chunk starts (overlap = 2)
+
+CHUNK_SLIDING_ORACLE = f"""
+WITH t AS (
+    SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
+),
+c AS (
+    SELECT doc_id, toks,
+           unnest(range(0, CAST(ceil(greatest(len(toks) - {CHUNK_WINDOW}, 0)
+                                     / {CHUNK_STRIDE}.0) AS BIGINT) + 1))
+               AS chunk_id
+    FROM t
+    WHERE len(toks) > 0
+)
+SELECT doc_id,
+       chunk_id,
+       chunk_id * {CHUNK_STRIDE} AS start_tok,
+       CAST(least({CHUNK_WINDOW},
+                  len(toks) - chunk_id * {CHUNK_STRIDE}) AS BIGINT)
+           AS chunk_tokens,
+       array_to_string(
+           toks[(chunk_id*{CHUNK_STRIDE}+1):(chunk_id*{CHUNK_STRIDE}+{CHUNK_WINDOW})],
+           ' ') AS chunk
+FROM c
+"""
+
+
+@query("chunk_sliding", oracle=CHUNK_SLIDING_ORACLE)
+def chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlapping sliding-window chunks (window=6 tokens, stride=4) per
+    document, with start offset and actual chunk length — the segmentation
+    every RAG indexer / fixed-context pre-training loader runs first.
+
+    Chunk-start rule (pinned identically in the oracle): starts are
+    0, 4, 8, … and the LAST start is the first one whose window reaches
+    the end of the document — ceil(max(n−window, 0)/stride) + 1 starts
+    total, so a doc shorter than one window yields exactly one (partial)
+    chunk and nothing is emitted past the end.
+
+    Scale shape: map-only — explode(sequence) + slice + array_join, no
+    shuffle at all (the only wide op in a production run would be the
+    sink's repartition). Overlap multiplies output bytes by
+    window/stride, not compute; at 100 TB the operator streams through
+    whole-stage codegen with zero Python."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", tokens_col("text").alias("toks")).where(
+        F.size("toks") > 0
+    )
+    return sliding_chunks(toks)
+
+
+def sliding_chunks(toks: DataFrame) -> DataFrame:
+    """(doc_id, toks) → overlapping (doc_id, chunk_id, start_tok,
+    chunk_tokens, chunk) windows; the map-only core of ``chunk_sliding``,
+    reusable over any tokenized frame (property-tested on arbitrary
+    corpora in tests/test_properties.py)."""
+    n_starts = (
+        F.ceil(
+            F.greatest(F.size("toks") - F.lit(CHUNK_WINDOW), F.lit(0))
+            / F.lit(CHUNK_STRIDE)
+        ).cast("long")
+        + 1
+    )
+    start = (F.col("chunk_id") * CHUNK_STRIDE).cast("long")
+    return (
+        toks.select(
+            "doc_id",
+            "toks",
+            F.explode(
+                F.sequence(F.lit(0).cast("long"), n_starts - 1)
+            ).alias("chunk_id"),
+        )
+        .select(
+            "doc_id",
+            "chunk_id",
+            start.alias("start_tok"),
+            F.least(
+                F.lit(CHUNK_WINDOW).cast("long"),
+                F.size("toks").cast("long") - start,
+            ).alias("chunk_tokens"),
+            F.array_join(
+                F.slice("toks", (start + 1).cast("int"), CHUNK_WINDOW), " "
+            ).alias("chunk"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Temperature-based source mixing — the multilingual/multi-source sampling
+# rule (XLM-R / mT5: p_s ∝ n_s^alpha). mix_sources_uniform flattens the
+# mixture completely; temperature alpha=0.5 flattens it HALFWAY, keeping
+# sqrt(n_min/n_s)-scaled acceptance so big sources still dominate, just
+# less. Same deterministic nested-sample hash threshold.
+# ---------------------------------------------------------------------------
+
+MIX_ALPHA = 0.5
+
+MIX_TEMP_ORACLE = f"""
+WITH counts AS (
+    SELECT source, count(*) AS n_total FROM documents GROUP BY source
+),
+m AS (SELECT min(n_total) AS m FROM counts),
+marked AS (
+    SELECT d.source, c.n_total,
+           CASE WHEN (d.doc_id * {_KNUTH}) % {_MOD}
+                     < CAST(floor(pow(CAST(m.m AS DOUBLE) / c.n_total,
+                                      1.0 - {MIX_ALPHA}) * {_MOD})
+                            AS BIGINT)
+                THEN 1 ELSE 0 END AS kept
+    FROM documents d
+    JOIN counts c USING (source)
+    CROSS JOIN m
+)
+SELECT source,
+       CAST(max(n_total) AS BIGINT) AS n_total,
+       CAST(sum(kept) AS BIGINT) AS n_kept,
+       {sql_hround("CAST(sum(kept) AS DOUBLE) / max(n_total)", 4)} AS kept_frac
+FROM marked
+GROUP BY source
+"""
+
+
+@query("mix_sources_temperature", oracle=MIX_TEMP_ORACLE)
+def mix_sources_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-flattened source mixture: keep
+    iff knuth(doc_id) < (n_min/n_s)^(1-alpha)·2³², alpha=0.5 — the
+    multinomial temperature-sampling rule of the published multilingual
+    pipelines, made deterministic with the same nested hash threshold as
+    ``mix_sources_uniform`` (alpha=0 reproduces it exactly; alpha=1 keeps
+    everything).
+
+    The acceptance rate is a double on both engines, but computed in ONE
+    pinned shape — pow(min/n, 1−alpha) then floor(rate·2³²) to an integer
+    threshold — so the hash compare is exact. Scale shape is unchanged
+    from the uniform mixer: tiny broadcast count table, map-only
+    admission, one partial-agg audit shuffle."""
+    docs = load_table(spark, sf_dir, "documents")
+    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
+    m = counts.agg(F.min("n_total").alias("m"))
+    rate = F.pow(
+        F.col("m").cast("double") / F.col("n_total"), F.lit(1.0 - MIX_ALPHA)
+    )
+    marked = (
+        docs.join(broadcast(counts), "source")
+        .crossJoin(broadcast(m))
+        .select(
+            "source",
+            "n_total",
+            F.when(
+                F.pmod(F.col("doc_id") * _KNUTH, F.lit(_MOD))
+                < F.floor(rate * _MOD).cast("long"),
+                1,
+            )
+            .otherwise(0)
+            .alias("kept"),
+        )
+    )
+    return marked.groupBy("source").agg(
+        F.max("n_total").alias("n_total"),
+        F.sum("kept").alias("n_kept"),
+        hround(
+            F.sum("kept").cast("double") / F.max("n_total"), 4
+        ).alias("kept_frac"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Vocabulary coverage — tokenizer-sizing curve
+#
+# What fraction of the token stream the top-N vocabulary explains (tokenizer
+# sizing). One wordcount shuffle + a TakeOrdered cut; the cumulative window
+# runs over N rows, never the vocabulary.
+# ---------------------------------------------------------------------------
+
+_VOCAB_N = 20
+
+VOCAB_ORACLE = f"""
+WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
+wc AS (SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY word),
+tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM wc),
+top AS (SELECT word, cnt FROM wc ORDER BY cnt DESC, word LIMIT {_VOCAB_N})
+SELECT CAST(row_number() OVER (ORDER BY cnt DESC, word) AS BIGINT) AS rank,
+       word,
+       cnt AS n_occurrences,
+       CAST((CAST(sum(cnt) OVER (ORDER BY cnt DESC, word) AS HUGEINT)
+            * 1000000)
+           // t AS BIGINT) AS coverage_ppm
+FROM top, tot
+"""
+
+
+@query("text_vocab_coverage", oracle=VOCAB_ORACLE)
+def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-N vocabulary with cumulative corpus coverage (integer ppm) —
+    the tokenizer-sizing curve: how much of the token stream the N most
+    frequent words explain.
+
+    Scale shape: ONE wordcount hash-agg over the corpus (map-side
+    combine), then the N-row head comes off a ``TakeOrderedAndProject``
+    (orderBy+limit — no global sort materializes the full vocabulary);
+    the cumulative-share window and the broadcast total-token join touch
+    only those N rows. Coverage is integer ppm via BIGINT floor-division,
+    so the curve hashes exactly cross-engine.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    wc = (
+        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    tot = wc.agg(F.sum("cnt").cast("long").alias("t"))
+    top = wc.orderBy(F.desc("cnt"), "word").limit(_VOCAB_N)
+    w = (
+        Window.orderBy(F.desc("cnt"), "word")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )  # N-row head only — never the full vocabulary
+    return (
+        top.crossJoin(F.broadcast(tot))
+        .withColumn(
+            "rank",
+            F.row_number()
+            .over(Window.orderBy(F.desc("cnt"), "word"))
+            .cast("long"),
+        )
+        .withColumn("cum", F.sum("cnt").over(w).cast("long"))
+        .select(
+            "rank",
+            "word",
+            F.col("cnt").alias("n_occurrences"),
+            F.expr("(CAST(cum AS DECIMAL(38,0)) * 1000000) div t").alias("coverage_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact duplicate substring spans — Lee et al. (2022) signal, gram-keyed
+#
+# Per-document fraction of token 8-grams that also appear in another document.
+# Both heavy steps are gram-keyed hash aggregates/joins, never
+# document×document.
+# ---------------------------------------------------------------------------
+
+_GRAM_K = 8
+
+SUBSTR_ORACLE = f"""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+g AS (
+    SELECT doc_id, array_to_string(t[i:i+{_GRAM_K - 1}], ' ') AS gram
+    FROM (SELECT doc_id, t,
+                 unnest(generate_series(1, len(t) - {_GRAM_K - 1})) AS i
+          FROM toks WHERE len(t) >= {_GRAM_K})
+),
+dup AS (
+    SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
+)
+SELECT g.doc_id,
+       CAST(count(*) AS BIGINT) AS n_grams,
+       CAST(count(*) FILTER (WHERE d.gram IS NOT NULL) AS BIGINT)
+           AS n_dup_grams,
+       CAST((CAST(count(*) FILTER (WHERE d.gram IS NOT NULL) AS HUGEINT)
+           * 1000000) // count(*) AS BIGINT) AS dup_ppm
+FROM g LEFT JOIN dup d ON g.gram = d.gram
+GROUP BY g.doc_id
+"""
+
+
+@query("dedup_substring_ngrams", oracle=SUBSTR_ORACLE)
+def dedup_substring_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document exact duplicate-substring fraction: the share of a
+    document's token 8-grams that also occur in ANOTHER document — the
+    deduplicate-training-data signal of Lee et al. (2022), at 8-gram
+    rather than suffix-array grain.
+
+    Scale shape: gram-keyed end to end, ONE explode, no join — grams
+    collapse to (gram, doc) grain with a per-doc occurrence count, a
+    gram-partitioned window counts distinct documents per gram (the rows
+    ARE distinct docs at that grain), and one doc-keyed aggregate folds
+    the ppm fraction; documents never pair with documents. This replaced
+    a dup-gram left-join formulation (round 6) whose physical plan ran
+    the gram explode TWICE (both join inputs) and depended on
+    broadcasting the duplicate-gram set — fine at fixture scale, not at
+    100 TB where that set is corpus-sized; the window form is ~35%
+    faster locally and keeps the same three gram/doc-keyed exchanges at
+    any scale. At 100 TB the gram strings would be ``xxhash64`` 8-byte
+    keys (the dedup_exact compaction, dedup.py:37) and hot boilerplate
+    grams are bounded by the same df-cap used in dedup_ngram_jaccard
+    (dedup.py:70); both swaps leave this plan shape unchanged. Short
+    documents (<8 tokens) are excluded on both engines.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
+        F.size("t") >= _GRAM_K
+    )
+    grams = toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(1, size(t) - {_GRAM_K - 1}),"
+                f" i -> array_join(slice(t, i, {_GRAM_K}), ' '))"
+            )
+        ).alias("gram"),
+    )
+    occ = grams.groupBy("gram", "doc_id").agg(
+        F.count(F.lit(1)).alias("occ")
+    )
+    nd = occ.withColumn(
+        "nd", F.count(F.lit(1)).over(Window.partitionBy("gram"))
+    )
+    return (
+        nd.groupBy("doc_id")
+        .agg(
+            F.sum("occ").cast("long").alias("n_grams"),
+            F.coalesce(
+                F.sum(F.when(F.col("nd") >= 2, F.col("occ"))), F.lit(0)
+            )
+            .cast("long")
+            .alias("n_dup_grams"),
+        )
+        .withColumn(
+            "dup_ppm", F.expr("(CAST(n_dup_grams AS DECIMAL(38,0)) * 1000000) div n_grams")
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact-k deterministic sample — TakeOrdered over a per-key hash
+#
+# Exactly-k uniform sample as TakeOrderedAndProject over a deterministic per-
+# key hash — the RNG-free reservoir sample.
+# ---------------------------------------------------------------------------
+
+_RESERVOIR_K = 100
+
+RESERVOIR_ORACLE = f"""
+SELECT doc_id, source,
+       (doc_id * {_KNUTH}) % {_MOD} AS h
+FROM documents
+ORDER BY h, doc_id
+LIMIT {_RESERVOIR_K}
+"""
+
+
+@query("sample_reservoir", oracle=RESERVOIR_ORACLE)
+def sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exactly-k uniform document sample: rank every key by the pinned
+    Knuth multiplicative hash and keep the k smallest — the deterministic,
+    RNG-free reservoir sample (the hash order is a fixed pseudo-random
+    permutation of the key space; a different "seed" is a different
+    multiplier).
+
+    Scale shape: ``orderBy(h).limit(k)`` plans as TakeOrderedAndProject —
+    each task keeps a k-row heap, the driver merges P·k rows; no shuffle
+    of the corpus and no full sort anywhere (plan-pinned in
+    tests/test_round4f.py). Complements sample_split (bucket assignment,
+    no size guarantee) and sample_weighted (Bernoulli, expected-size
+    only): this is the exact-size primitive, and it is STABLE — a
+    document in the sample stays in the sample when new docs arrive
+    unless bumped by a smaller hash, which is what makes hash-reservoirs
+    diffable across corpus versions.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(
+            "doc_id",
+            "source",
+            F.pmod(F.col("doc_id") * _KNUTH, F.lit(_MOD)).alias("h"),
+        )
+        .orderBy("h", "doc_id")
+        .limit(_RESERVOIR_K)
+    )
+
+
+# ---------------------------------------------------------------------------
+# BPE-style merge training — count pairs globally, merge, repeat
+# ---------------------------------------------------------------------------
+
+BPE_MERGES = 4
+BPE_JOIN = "·"  # merged-token separator; never appears in fixture words
+
+
+@query("tokenizer_bpe_train")  # rows-only: iterative (K data-dependent passes)
+def tokenizer_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train K=4 BPE-style merges over the corpus with words as the base
+    alphabet: each round counts all adjacent pairs, adopts the most
+    frequent (ties broken lexicographically), rewrites every document
+    with the merged symbol, and repeats — exactly the
+    count→argmax→substitute loop a distributed BPE/wordpiece trainer
+    runs, producing the learned merge table.
+
+    Scale shape per round: pair counting is one explode + hash aggregate
+    with map-side combine (pair-grain shuffle); the argmax is a 1-row
+    TakeOrdered collect (dimension-sized driver state, the kmeans-
+    centroid rule); substitution is a map-only ``aggregate`` fold per
+    document implementing greedy left-to-right non-overlapping merges.
+    K rounds = K corpus passes — which is why production trainers run
+    this on a sample, documented here rather than hidden. Rows-only
+    (the loop is data-dependent); the identical greedy algorithm in pure
+    Python pins every merge and count in tests/test_round4h.py.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(F.split("text", " ").alias("toks")).persist()
+    merges: list[tuple[int, str, str, str, int]] = []
+    try:
+        for step in range(1, BPE_MERGES + 1):
+            pairs = toks.select(
+                F.explode(
+                    F.expr(
+                        "zip_with(slice(toks, 1, greatest(size(toks)-1, 0)),"
+                        " slice(toks, 2, greatest(size(toks)-1, 0)),"
+                        " (x, y) -> struct(x AS x, y AS y))"
+                    )
+                ).alias("p")
+            )
+            top = (
+                pairs.groupBy("p.x", "p.y")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .orderBy(F.desc("c"), "x", "y")
+                .limit(1)
+                .collect()
+            )
+            if not top or top[0]["c"] < 2:
+                break
+            x, y, c = top[0]["x"], top[0]["y"], int(top[0]["c"])
+            merged = f"{x}{BPE_JOIN}{y}"
+            merges.append((step, x, y, merged, c))
+            # data-derived tokens enter the plan as bound literals
+            # (F.lit), never interpolated into SQL text — an apostrophe
+            # or backslash in a token must not break the expression
+            def _merge_step(acc: Column, t: Column) -> Column:
+                hit = (
+                    (F.size(acc) > 0)
+                    & (F.element_at(acc, -1) == F.lit(x))
+                    & (t == F.lit(y))
+                )
+                return F.when(
+                    hit,
+                    F.concat(
+                        F.slice(acc, F.lit(1), F.size(acc) - 1),
+                        F.array(F.lit(merged)),
+                    ),
+                ).otherwise(F.concat(acc, F.array(t)))
+
+            nxt = toks.select(
+                F.aggregate(
+                    "toks",
+                    F.array().cast("array<string>"),
+                    _merge_step,
+                ).alias("toks")
+            ).persist()
+            try:
+                nxt.count()  # materialize before dropping the parent
+            except BaseException:
+                nxt.unpersist()  # failed mid-round: don't strand it
+                raise
+            toks.unpersist()
+            toks = nxt
+    finally:
+        toks.unpersist()
+    return spark.createDataFrame(
+        merges or [(0, "", "", "", 0)],
+        "step BIGINT, left STRING, right STRING, merged STRING, "
+        "pair_count BIGINT",
     )

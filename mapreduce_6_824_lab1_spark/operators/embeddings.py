@@ -1,4 +1,6 @@
-"""Embedding-column utilities beyond search: storage quantization.
+"""Embedding and model operators beyond search: int8 storage quantization,
+the Gram matrix and PCA power iteration, contrastive negative sampling,
+tree-ensemble batch scoring and binary-classifier evaluation.
 
 ``embedding_quantize_int8`` is the vector-store compression step every
 100 TB embedding corpus runs before serving (float32 → int8 = 4× smaller,
@@ -408,3 +410,136 @@ def sample_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# Tree-ensemble batch scoring — models compiled to CASE expressions
+# ---------------------------------------------------------------------------
+
+# A fitted tree ensemble is constants: batch inference at 100 TB is NOT a
+# UDF problem, it is expression compilation — each tree becomes a nested
+# CASE over the feature columns, whole-stage-codegen fuses the ensemble
+# into the scan, and scoring is map-only with zero Python. The shared SQL
+# string (TPC-H pattern) IS both the Spark query and the oracle.
+
+_T1_LEAF = """CASE WHEN cents < 5000000 THEN
+         CASE WHEN urgent THEN 'A1' ELSE 'A2' END
+       ELSE CASE WHEN status = 'F' THEN
+              CASE WHEN cents < 15000000 THEN 'A3' ELSE 'A4' END
+            ELSE 'A5' END END"""
+_T1_VAL = """CASE WHEN cents < 5000000 THEN
+         CASE WHEN urgent THEN 820000 ELSE 350000 END
+       ELSE CASE WHEN status = 'F' THEN
+              CASE WHEN cents < 15000000 THEN 150000 ELSE 90000 END
+            ELSE 600000 END END"""
+_T2_LEAF = """CASE WHEN urgent THEN
+         CASE WHEN cents < 2000000 THEN 'B1' ELSE 'B2' END
+       ELSE CASE WHEN status = 'O' THEN 'B3' ELSE 'B4' END END"""
+_T2_VAL = """CASE WHEN urgent THEN
+         CASE WHEN cents < 2000000 THEN 900000 ELSE 500000 END
+       ELSE CASE WHEN status = 'O' THEN 300000 ELSE 120000 END END"""
+
+TREE_SCORE_SQL = f"""
+WITH f AS (
+    SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+           (o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%')
+               AS urgent,
+           o_orderstatus AS status
+    FROM orders
+),
+s AS (
+    SELECT {_T1_LEAF} AS leaf1, {_T2_LEAF} AS leaf2,
+           CAST({_T1_VAL} + {_T2_VAL} AS BIGINT) AS score_micro
+    FROM f
+)
+SELECT leaf1, leaf2, score_micro, CAST(count(*) AS BIGINT) AS n_orders
+FROM s GROUP BY leaf1, leaf2, score_micro
+"""
+
+
+@query("score_tree_ensemble", oracle=TREE_SCORE_SQL)
+def score_tree_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch inference of a (hand-fitted) two-tree ensemble over order
+    features, audited as per-leaf-path populations with the ensemble
+    score in integer micro-units.
+
+    The point is the COMPILATION STRATEGY: a fitted tree is constants, so
+    scoring is nested CASE expressions the engine fuses into the scan via
+    whole-stage codegen — map-only, zero Python, zero shuffle before the
+    leaf-grain (≤5×4 cells) audit aggregate. This is how GBDT/RF models
+    deploy on 100 TB (export trees → SQL), versus a per-row UDF that
+    leaves codegen and pays serialization per row. Shared SQL string =
+    query and oracle (the sql_tpch pattern), so semantics are identical
+    by construction.
+    """
+    from mapreduce_6_824_lab1_spark.catalog import configure
+
+    configure(spark)
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    return spark.sql(TREE_SCORE_SQL)
+
+
+# ---------------------------------------------------------------------------
+# Binary-classifier evaluation — confusion matrix + P/R/F1 in exact ppm
+# ---------------------------------------------------------------------------
+
+_EVAL_THRESHOLD = 900_000  # ensemble micro-score cut for "urgent" call
+
+EVAL_ORACLE = f"""
+WITH f AS (
+    SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+           (o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%')
+               AS urgent,
+           o_orderstatus AS status
+    FROM orders
+),
+scored AS (
+    SELECT urgent AS actual,
+           ({_T1_VAL} + {_T2_VAL}) >= {_EVAL_THRESHOLD} AS pred
+    FROM f
+),
+cm AS (
+    SELECT CAST(count(*) FILTER (WHERE pred AND actual) AS BIGINT) AS tp,
+           CAST(count(*) FILTER (WHERE pred AND NOT actual) AS BIGINT)
+               AS fp,
+           CAST(count(*) FILTER (WHERE NOT pred AND actual) AS BIGINT)
+               AS fn,
+           CAST(count(*) FILTER (WHERE NOT pred AND NOT actual) AS BIGINT)
+               AS tn
+    FROM scored
+)
+SELECT tp, fp, fn, tn,
+       CAST(floor(tp * 1000000.0 / (tp + fp)) AS BIGINT) AS precision_ppm,
+       CAST(floor(tp * 1000000.0 / (tp + fn)) AS BIGINT) AS recall_ppm,
+       CAST(floor(2 * tp * 1000000.0 / (2 * tp + fp + fn)) AS BIGINT)
+           AS f1_ppm
+FROM cm
+"""
+
+
+@query("eval_binary_classifier", oracle=EVAL_ORACLE)
+def eval_binary_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Model evaluation at scale: score every order with the
+    ``score_tree_ensemble`` trees, call 'urgent' when the ensemble
+    micro-score clears a threshold, and fold the confusion matrix plus
+    precision/recall/F1 against the actual priority flag — ONE scan, ONE
+    aggregate, metrics as floor-divided integer ppm (F1 via its 2·tp/(2·tp+fp+fn)
+    identity — one division per metric from integer counts, never a
+    ratio of ratios; counts stay < 2^53 so the shared floor(x/y) form
+    is exact on both engines, and `//` vs `div` dialect drift is
+    avoided by not using either).
+
+    This is the eval harness a batch-inference pipeline bolts onto its
+    scoring pass: the conditional counts ride the same aggregate that
+    would write predictions, so evaluation is free at 100 TB. The same
+    CASE-expression score fragments are shared verbatim with the scoring
+    key and the oracle (the sql_tpch shared-string rule), making the
+    predictor under test identical by construction. Prediction is
+    deliberately imperfect (price+status can't fully determine priority)
+    so every confusion cell is exercised — pinned in test_round4h.
+    """
+    from mapreduce_6_824_lab1_spark.catalog import configure
+
+    configure(spark)
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    return spark.sql(EVAL_ORACLE)

@@ -23,6 +23,10 @@ from pyspark.sql.window import Window
 from mapreduce_6_824_lab1_spark.catalog import fan_out, load_table
 from mapreduce_6_824_lab1_spark.functions.text import SQL_TOKENS, tokens_col, words_of
 from mapreduce_6_824_lab1_spark.functions.numeric import hround
+from mapreduce_6_824_lab1_spark.operators.dedup import (
+    _SHINGLES_FROM_TOKS as _TRIGRAMS_FROM_TOKS,
+    _SHINGLES_SQL as _TRIGRAMS_SQL,
+)
 from mapreduce_6_824_lab1_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -449,20 +453,6 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 REPETITION_MAX_DUP_TRIGRAM = 0.60
-
-_TRIGRAMS_FROM_TOKS = (
-    "zip_with(slice(toks, 1, greatest(size(toks) - 2, 0)), "
-    "zip_with(slice(toks, 2, greatest(size(toks) - 2, 0)), "
-    "slice(toks, 3, greatest(size(toks) - 2, 0)), "
-    "(y, z) -> concat(y, ' ', z)), "
-    "(x, yz) -> concat(x, ' ', yz))"
-)
-
-_TRIGRAMS_SQL = (
-    "list_transform(range(0, len(string_split(text, ' ')) - 2), "
-    "i -> string_split(text, ' ')[i+1] || ' ' || "
-    "string_split(text, ' ')[i+2] || ' ' || string_split(text, ' ')[i+3])"
-)
 
 
 @query(

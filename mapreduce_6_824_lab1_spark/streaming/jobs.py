@@ -849,7 +849,7 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-from mapreduce_6_824_lab1_spark.operators.relational2 import (  # noqa: E402
+from mapreduce_6_824_lab1_spark.operators.relational import (  # noqa: E402
     CDC_CUTOVER,
     CDC_ORACLE,
 )

@@ -1,4 +1,4 @@
-"""Behavioral guards for the curation2 operators, beyond oracle parity:
+"""Behavioral guards for the curation operators, beyond oracle parity:
 the LM score is a real entropy estimate, chunk ownership is conserved,
 mixing hits its target fraction, and shards are balanced."""
 
@@ -33,7 +33,7 @@ def test_dedup_chunks_ownership_conserved(spark):
     the fixture (the operator isn't vacuous). Chunk generation reuses
     chunk_frame — its own fidelity is pinned independently against a
     Python reference in test_chunk_frame_matches_python_reference."""
-    from mapreduce_6_824_lab1_spark.operators.curation2 import chunk_frame
+    from mapreduce_6_824_lab1_spark.operators.curation import chunk_frame
 
     rows = QUERIES["dedup_chunks"](spark, SF_DIR).collect()
     docs = load_table(spark, SF_DIR, "documents")
@@ -52,7 +52,7 @@ def test_dedup_chunks_first_doc_owns_all_its_distinct_chunks(spark):
     """doc_id 0 has the lowest id, so every one of its DISTINCT chunks is
     owned by it: kept_chunks must equal its distinct-chunk count exactly
     (its only drops are within-doc repeats)."""
-    from mapreduce_6_824_lab1_spark.operators.curation2 import chunk_frame
+    from mapreduce_6_824_lab1_spark.operators.curation import chunk_frame
 
     row = (
         QUERIES["dedup_chunks"](spark, SF_DIR)
@@ -182,7 +182,7 @@ def test_chunk_frame_matches_python_reference(spark):
     """Edge cases the fixture never exercises: 1-token docs, exact-multiple
     lengths, and partial final chunks — pinned against a plain-Python
     chunker for token counts 1..8."""
-    from mapreduce_6_824_lab1_spark.operators.curation2 import (
+    from mapreduce_6_824_lab1_spark.operators.curation import (
         CHUNK_TOKENS,
         chunk_frame,
     )

@@ -76,7 +76,7 @@ def test_rdd_mapreduce_matches_declarative(spark, corpus):
 def test_sliding_chunks_reconstruct_any_corpus(spark, corpus):
     """Lossless segmentation on ARBITRARY corpora: first `stride` tokens of
     every non-final chunk plus the whole final chunk reproduce the doc."""
-    from mapreduce_6_824_lab1_spark.operators.curation2 import (
+    from mapreduce_6_824_lab1_spark.operators.curation import (
         CHUNK_STRIDE,
         sliding_chunks,
     )
@@ -326,7 +326,7 @@ def test_interval_union_duplication_invariant(spark, ivs):
     """Union length equals the python sweep AND is invariant under
     duplicating every interval — overlaps must count once, which is the
     whole point of the operator."""
-    from mapreduce_6_824_lab1_spark.operators.analytics5 import (
+    from mapreduce_6_824_lab1_spark.operators.temporal import (
         interval_union_fold,
     )
 
@@ -392,7 +392,7 @@ def test_concurrency_sweep_matches_serial_prefix_sum(spark, points):
     boundaries, the class where an ordering mismatch between the local
     window and the offset table would show up (the interval_union
     tie-order bug's sibling hazard)."""
-    from mapreduce_6_824_lab1_spark.operators.analytics5 import (
+    from mapreduce_6_824_lab1_spark.operators.analytics import (
         concurrency_sweep,
     )
 

@@ -8,7 +8,7 @@ import pytest
 
 from mapreduce_6_824_lab1_spark import QUERIES
 from mapreduce_6_824_lab1_spark.catalog import fan_out, load_table
-from mapreduce_6_824_lab1_spark.operators.curation2 import (
+from mapreduce_6_824_lab1_spark.operators.curation import (
     CHUNK_STRIDE,
     CHUNK_WINDOW,
 )

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from mapreduce_6_824_lab1_spark import QUERIES
-from mapreduce_6_824_lab1_spark.operators.analytics3 import EWMA_K, MEDIAN_WIN
+from mapreduce_6_824_lab1_spark.operators.temporal import EWMA_K, MEDIAN_WIN
 from mapreduce_6_824_lab1_spark.operators.text_analysis import _KNUTH, _MOD
 from mapreduce_6_824_lab1_spark.plans.inspect import formatted_plan
 from tests.conftest import SF_DIR
@@ -187,7 +187,7 @@ def test_rolling_corr_bounded_and_matches_numpy(spark):
         .reset_index()
         .sort_values(["event_type", "day"], ignore_index=True)
     )
-    from mapreduce_6_824_lab1_spark.operators.analytics3 import CORR_WIN
+    from mapreduce_6_824_lab1_spark.operators.temporal import CORR_WIN
 
     got = got.set_index(["event_type", "day"])
     for _, grp in daily.groupby("event_type"):
@@ -209,7 +209,7 @@ def test_mad_fence_is_robust_to_extremes(spark, events_pd):
     MAD statistics computed WITH the outliers must equal numpy's on the
     same data (exactness), and the flagged rows must all sit strictly
     outside the fence (consistency)."""
-    from mapreduce_6_824_lab1_spark.operators.analytics3 import MAD_K
+    from mapreduce_6_824_lab1_spark.operators.analytics import MAD_K
 
     got = (
         QUERIES["anomaly_mad_robust"](spark, SF_DIR)
@@ -290,7 +290,7 @@ def test_abc_bucket_decomposition_matches_naive_cumsum(spark):
 def test_incremental_topk_segments_both_contribute(spark):
     """The merge must genuinely draw from both segments (otherwise the
     operator silently degenerates to a plain top-k of one side)."""
-    from mapreduce_6_824_lab1_spark.operators.analytics3 import (
+    from mapreduce_6_824_lab1_spark.operators.relational import (
         INC_TOPK_CUTOFF,
     )
 

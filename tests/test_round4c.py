@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 from mapreduce_6_824_lab1_spark import QUERIES
-from mapreduce_6_824_lab1_spark.operators.analytics4 import ASOF_TOL_DAYS
+from mapreduce_6_824_lab1_spark.operators.relational import ASOF_TOL_DAYS
 from mapreduce_6_824_lab1_spark.plans.inspect import formatted_plan
 from tests.conftest import SF_DIR
 

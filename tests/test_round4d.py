@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 
 from mapreduce_6_824_lab1_spark import QUERIES
-from mapreduce_6_824_lab1_spark.operators.analytics4 import FP_MIN_COUNT
+from mapreduce_6_824_lab1_spark.operators.analytics import FP_MIN_COUNT
 from mapreduce_6_824_lab1_spark.operators.temporal import RANGE_US
 from tests.conftest import SF_DIR
 

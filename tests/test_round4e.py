@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 
 from mapreduce_6_824_lab1_spark import QUERIES
-from mapreduce_6_824_lab1_spark.operators.analytics5 import _RB_K
+from mapreduce_6_824_lab1_spark.operators.analytics import _RB_K
 from tests.conftest import SF_DIR
 
 

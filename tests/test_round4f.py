@@ -9,7 +9,7 @@ import numpy as np
 import pandas as pd
 
 from mapreduce_6_824_lab1_spark import QUERIES
-from mapreduce_6_824_lab1_spark.operators.curation3 import (
+from mapreduce_6_824_lab1_spark.operators.curation import (
     _GRAM_K,
     _RESERVOIR_K,
     _VOCAB_N,

@@ -8,7 +8,7 @@ from collections import Counter
 import pandas as pd
 
 from mapreduce_6_824_lab1_spark import QUERIES
-from mapreduce_6_824_lab1_spark.operators.curation3 import (
+from mapreduce_6_824_lab1_spark.operators.curation import (
     BPE_JOIN,
     BPE_MERGES,
 )

@@ -1,6 +1,7 @@
-"""Every ``tools/<name>.py`` that the package, the tests, the tools,
-bench.py or the README cites must exist, so deleting a tool cannot
-leave a dangling citation behind."""
+"""Every ``tools/<name>.py``, operator module and ``tests/test_<name>.py``
+that the package, the tests, the tools, bench.py or the README cites must
+exist, so deleting, folding or renaming a file cannot leave a dangling
+citation behind."""
 
 from __future__ import annotations
 
@@ -12,9 +13,14 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 TOOLS = REPO / "tools"
+OPERATORS = "mapreduce_6_824_lab1_spark/operators"
 CITING = ["mapreduce_6_824_lab1_spark", "tests", "tools", "bench.py", "README.md"]
 CITATION = re.compile(
     r"\btools/(\w+)\.py\b|\bfrom tools\.(\w+) import\b|\bimport tools\.(\w+)"
+)
+# An operator module, cited by path or by dotted name, or a test file.
+FILE_CITATION = re.compile(
+    r"\boperators/(\w+)\.py\b|\boperators\.(\w+)|\btests/(test_\w+)\.py\b"
 )
 # The scripts in tools/ (and bench.py, once it puts tools/ on sys.path)
 # import their siblings by bare module name: `from bench_guard import …`.
@@ -84,3 +90,53 @@ def test_the_scan_sees_citations():
     assert "bench_guard" in {
         tool for _, tool in _sibling_imports(TOOLS / "floor_medians.py")
     }
+
+
+def _file_citations(paths):
+    """(path, lineno, repo-relative file) for every citation of an operator
+    module or a test file in ``paths``."""
+    for path in paths:
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            for m in FILE_CITATION.finditer(line):
+                by_path, dotted, test = m.groups()
+                if test:
+                    yield path, lineno, f"tests/{test}.py"
+                else:
+                    yield path, lineno, f"{OPERATORS}/{by_path or dotted}.py"
+
+
+def _missing_files(paths):
+    return [
+        (path, lineno, cited)
+        for path, lineno, cited in _file_citations(paths)
+        if not (REPO / cited).is_file()
+    ]
+
+
+def test_cited_operator_modules_and_tests_exist():
+    missing = [
+        f"{path.relative_to(REPO)}:{lineno}: {cited}"
+        for path, lineno, cited in _missing_files(_citing_files())
+    ]
+    assert not missing, "citations of missing files:\n" + "\n".join(missing)
+
+
+def test_fabricated_file_citations_are_caught(tmp_path):
+    """Mutation check: a citation of a folded-away operator module, in
+    either spelling, or of a missing test file is reported; live ones
+    are not."""
+    gone = "analytics" + "4"
+    cite = tmp_path / "cite.py"
+    cite.write_text(
+        f"# see operators/{gone}.py and tests/test_{gone}.py\n"
+        f"from mapreduce_6_824_lab1_spark.operators.{gone} import X\n"
+        "from mapreduce_6_824_lab1_spark.operators.dedup import Y\n"
+        "# pinned in tests/test_properties.py\n"
+    )
+    assert [cited for _, _, cited in _missing_files([cite])] == [
+        f"{OPERATORS}/{gone}.py",
+        f"tests/test_{gone}.py",
+        f"{OPERATORS}/{gone}.py",
+    ]
+    cited = {c for _, _, c in _file_citations(_citing_files())}
+    assert {f"{OPERATORS}/dedup.py", "tests/test_plans.py"} <= cited

@@ -487,7 +487,7 @@ def _rest_checks(spark, sf_dir: str, sf10: bool):
 
 def main() -> None:
     from mapreduce_6_824_lab1_spark import QUERIES
-    from mapreduce_6_824_lab1_spark.operators.curation3 import (
+    from mapreduce_6_824_lab1_spark.operators.curation import (
         BPE_JOIN,
         BPE_MERGES,
     )
