@@ -571,7 +571,6 @@ def _contract_partitions(pairs: DataFrame) -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     max_rounds: int = 50,
-    loop_partitions: int | None = None,
     local_contraction: bool = True,
 ) -> DataFrame:
     """Min-label propagation CC over an undirected pair list (doc_a, doc_b).
@@ -625,10 +624,9 @@ def connected_components(
     NODE-grain (tiny next to the corpus), and an untuned 200-partition
     default turns every round into hundreds of near-empty tasks — the
     same deliberate-sizing rule as the streaming STATE_PARTITIONS
-    (streaming/jobs.py). The default (``None``) sizes adaptively from the
-    measured pair count (~50k pairs per partition, floor 4, cap 200) —
-    the count is free because ``pairs`` must be materialized anyway (see
-    below); pass an explicit value to pin it at production scale.
+    (streaming/jobs.py). It is sized from the measured pair count (~50k
+    pairs per partition, floor 4, cap 200) — the count is free because
+    ``pairs`` must be materialized anyway (see below).
 
     ``pairs`` is persisted and counted BEFORE the union-reverse builds the
     edge list: the union's two branches otherwise each re-execute the
@@ -649,8 +647,7 @@ def connected_components(
         # coalesce an oversized shuffle down, but nothing can widen an
         # undersized one.
         n_pairs = pairs.count()  # one materialization of the DAG
-        if loop_partitions is None:
-            loop_partitions = max(4, min(200, (2 * n_pairs) // 50_000))
+        loop_partitions = max(4, min(200, (2 * n_pairs) // 50_000))
         # partition-local union-find contraction (see _contract_partitions):
         # shrinks the edge list and pre-flattens every within-partition
         # chain to a depth-1 star BEFORE the first distributed round, on

@@ -16,7 +16,6 @@ over the pristine parquet:
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -106,18 +105,18 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected and detached so the scratch tables and their /tmp dirs can be
     dropped before returning — no per-invocation leak.
     """
-    scratch = tempfile.mkdtemp(prefix="mr_spark_bucketed_")
     suffix = uuid.uuid4().hex[:8]
-    try:
-        out = bucketed_join_frame(spark, sf_dir, scratch, suffix)
-        return detach(out)
-    finally:
-        for name in (
-            f"mr_bucketed_lineitem_{suffix}",
-            f"mr_bucketed_orders_{suffix}",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(scratch, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_bucketed_", ignore_cleanup_errors=True
+    ) as scratch:
+        try:
+            return detach(bucketed_join_frame(spark, sf_dir, scratch, suffix))
+        finally:
+            for name in (
+                f"mr_bucketed_lineitem_{suffix}",
+                f"mr_bucketed_orders_{suffix}",
+            ):
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 @query(
@@ -140,8 +139,9 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     range, not the table.
     """
     o = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="mr_spark_part_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_part_", ignore_cleanup_errors=True
+    ) as path:
         (
             o.withColumn("o_year", F.year("o_orderdate"))
             .write.partitionBy("o_year")
@@ -156,8 +156,6 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             hround(F.sum("o_totalprice"), 2).alias("revenue"),
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -188,8 +186,9 @@ def similarity_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     cells = e.withColumn("cell", _cell("embedding"))
-    path = tempfile.mkdtemp(prefix="mr_spark_ivf_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_ivf_", ignore_cleanup_errors=True
+    ) as path:
         cells.write.partitionBy("cell").mode("overwrite").parquet(path)
         corpus = spark.read.parquet(path)
         probe_row = cells.filter(F.col("vec_id") == PROBE_VEC_ID).select(
@@ -217,8 +216,6 @@ def similarity_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -320,40 +317,18 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The scratch write is the layout step (directory per year); the read-
     back join with the dim filtered to label='focus' triggers DPP: Spark
-    lists only the 1996/1998 directories. The aggregate is collected to
-    detach from the scratch dir before it is removed.
+    lists only the 1996/1998 directories. The aggregate is detached from
+    the scratch dir before it is removed.
     """
-    import shutil
-    import tempfile
-
-    o = load_table(spark, sf_dir, "orders")
-    scratch = tempfile.mkdtemp(prefix="mr_spark_dpp_")
-    try:
-        o.withColumn(
-            "o_year", F.year("o_orderdate").cast("long")
-        ).write.partitionBy("o_year").parquet(f"{scratch}/orders")
-        fact = spark.read.parquet(f"{scratch}/orders")
-        dim = spark.createDataFrame(
-            list(DPP_YEARS), ["d_year", "label"]
-        )
-        out = (
-            fact.join(dim, fact["o_year"] == dim["d_year"])
-            .where(F.col("label") == "focus")
-            # partition-column read-back infers int32 even though the write
-            # cast to long; re-cast so the dtype matches the BIGINT oracle
-            .groupBy(F.col("o_year").cast("long").alias("o_year"))
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                cents_sum("o_totalprice").alias("revenue"),
-            )
-        )
-        return detach(out)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_dpp_", ignore_cleanup_errors=True
+    ) as scratch:
+        return detach(dpp_plan_frame(spark, sf_dir, scratch))
 
 
 def dpp_plan_frame(spark: SparkSession, sf_dir: str, scratch: str):
-    """The un-collected DPP join over an existing scratch dir (plan tests)."""
+    """The un-detached DPP join over ``scratch`` — ``join_partition_pruned``
+    detaches it, the plan tests inspect it."""
     o = load_table(spark, sf_dir, "orders")
     o.withColumn(
         "o_year", F.year("o_orderdate").cast("long")
@@ -365,10 +340,12 @@ def dpp_plan_frame(spark: SparkSession, sf_dir: str, scratch: str):
     return (
         fact.join(dim, fact["o_year"] == dim["d_year"])
         .where(F.col("label") == "focus")
-        .groupBy("o_year")
+        # partition-column read-back infers int32 even though the write
+        # cast to long; re-cast so the dtype matches the BIGINT oracle
+        .groupBy(F.col("o_year").cast("long").alias("o_year"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            hround(F.sum("o_totalprice"), 2).alias("revenue"),
+            cents_sum("o_totalprice").alias("revenue"),
         )
     )
 
@@ -420,35 +397,15 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_6_824_lab1_spark.session import scoped_conf
 
     with scoped_conf(spark, _BLOOM_CONFS):
-        li = load_table(spark, sf_dir, "lineitem")
-        o = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.year("o_orderdate") == 1999)
-            .select("o_orderkey")
-        )
-        out = (
-            li.hint("merge")
-            .join(o, li["l_orderkey"] == o["o_orderkey"])
-            .groupBy(F.month("l_shipdate").cast("long").alias("ship_month"))
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100
-                        + F.lit(0.5)
-                    ).cast("long")
-                ).alias("revenue_cents"),
-            )
-        )
         # materialize while the injection gate is open; the returned frame
         # is a checkpoint scan, so restoring the conf can't un-inject
-        return out.localCheckpoint(eager=True)
+        return bloom_plan_frame(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def bloom_plan_frame(spark: SparkSession, sf_dir: str):
-    """Un-checkpointed Bloom-pruned join (plan tests; caller sets confs)."""
+    """The un-checkpointed Bloom-pruned join — ``join_bloom_pruned``
+    checkpoints it, the plan tests inspect it; the caller sets
+    ``_BLOOM_CONFS``."""
     li = load_table(spark, sf_dir, "lineitem")
     o = (
         load_table(spark, sf_dir, "orders")
@@ -459,7 +416,17 @@ def bloom_plan_frame(spark: SparkSession, sf_dir: str):
         li.hint("merge")
         .join(o, li["l_orderkey"] == o["o_orderkey"])
         .groupBy(F.month("l_shipdate").cast("long").alias("ship_month"))
-        .agg(F.count(F.lit(1)).alias("n_items"))
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(
+                F.floor(
+                    F.col("l_extendedprice")
+                    * (1 - F.col("l_discount"))
+                    * 100
+                    + F.lit(0.5)
+                ).cast("long")
+            ).alias("revenue_cents"),
+        )
     )
 
 
@@ -510,12 +477,10 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-targeted files, and return the audit aggregate over the COMPACTED
     copy — equal to the oracle over the pristine table iff the rewrite
     lost/duplicated nothing."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="mr_spark_compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_compact_", ignore_cleanup_errors=True
+    ) as scratch:
         frag_dir, comp_dir = f"{scratch}/frag", f"{scratch}/comp"
         ev.repartition(COMPACT_INPUT_FILES).write.parquet(frag_dir)
         compact_dir(spark, frag_dir, comp_dir)
@@ -528,8 +493,6 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("user_id").alias("n_users"),
         )
         return detach(audit)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

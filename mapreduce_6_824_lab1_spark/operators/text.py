@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mapreduce_6_824_lab1_spark.catalog import fan_out, load_table
+from mapreduce_6_824_lab1_spark.catalog import load_table
 from mapreduce_6_824_lab1_spark.functions.text import SQL_TOKENS, words_of
 from mapreduce_6_824_lab1_spark.functions.numeric import hround
 from mapreduce_6_824_lab1_spark.registry import query

@@ -1,8 +1,8 @@
 """Physical-plan inspection helpers.
 
-The 100 TB contract is enforced here: tests assert that dims broadcast, that
-predicates reach the parquet scan (PushedFilters), and that hot paths stay
-inside WholeStageCodegen — not just that results match.
+The 100 TB contract is enforced here: tests assert that dims broadcast and
+that predicates reach the parquet scan (PushedFilters) — not just that
+results match.
 """
 
 from __future__ import annotations
@@ -28,8 +28,3 @@ def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries found on scans in the plan."""
     plan = formatted_plan(df)
     return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan)))

@@ -166,7 +166,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     custom source restartable in production. The loop is bounded and
     driver-side only; every data row still flows through executors.
     """
-    import shutil
     import tempfile
 
     from pyspark.sql.datasource import SimpleDataSourceStreamReader
@@ -186,8 +185,9 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(source_cls)
     except Exception:
         pass  # already registered in this session
-    scratch = tempfile.mkdtemp(prefix="mr_spark_pysrc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_pysrc_", ignore_cleanup_errors=True
+    ) as scratch:
         out_dir, ckpt = f"{scratch}/out", f"{scratch}/ckpt"
         seen, prev = 0, -1
         for _ in range(2 * STREAM_TOTAL // STREAM_CHUNK + 2):
@@ -211,5 +211,3 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("squared").alias("sum_squared"),
         )
         return detach(audit)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

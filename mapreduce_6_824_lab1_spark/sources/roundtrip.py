@@ -1,22 +1,28 @@
-"""Source/sink round-trips: text, CSV, JSON (SURVEY.md §2.C scans table).
+"""Source/sink round-trips: every file format, reader mode and sink mode
+the engine stages through scratch files (SURVEY.md §2.C scans table).
 
 The reference's entire I/O surface is plain-text files in, plain-text files
 out (``pg-*.txt`` → ``mr-out-*``; MIT 6.824 Lab 1 spec — the local checkout
 is the 2-line stub). Spark's equivalents are the DataFrameReader/Writer
-formats. Each round-trip query WRITES a fixture table to a scratch directory
-in the target format, READS it back with an explicit schema, and aggregates
-the re-read data; the oracle computes the same aggregate from the original
-parquet — so a value mismatch pinpoints encode/decode fidelity bugs, not
-just "file exists".
+formats. Each key here WRITES a fixture table to a scratch directory, READS
+it back and aggregates the re-read data; the oracle computes the same
+aggregate from the original parquet — so a value mismatch pinpoints
+encode/decode fidelity bugs, not just "file exists". The module holds:
+
+- format round-trips: text, CSV, JSON, ORC and XML;
+- parquet schema evolution (``mergeSchema``) and codec fidelity
+  (gzip/snappy/zstd);
+- PERMISSIVE bad-record quarantine for CSV and JSON landing zones;
+- the ``binaryFile`` whole-file reader;
+- the dynamic partition-overwrite sink.
 
 Scale note: writers shard one file per task (the ``mr-X-Y`` pattern, handled
 by Spark's output committer); the scratch dir is per-call so concurrent runs
-never collide.
+never collide. Every result is detached before its scratch dir is removed.
 """
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +31,10 @@ from pyspark.sql import functions as F
 from mapreduce_6_824_lab1_spark.catalog import detach, load_table
 from mapreduce_6_824_lab1_spark.functions.numeric import sql_hround
 from mapreduce_6_824_lab1_spark.registry import query
+
+_DOC_SCHEMA = (
+    "doc_id long, text string, lang string, source string, n_chars long"
+)
 
 # The aggregate computed after every round-trip (and by the oracles on the
 # pristine parquet): if any row/field is corrupted in flight, these diverge.
@@ -50,40 +60,39 @@ def _doc_agg(df: DataFrame) -> DataFrame:
     )
 
 
-def _scratch() -> str:
-    return tempfile.mkdtemp(prefix="mr_spark_roundtrip_")
+def _doc_roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    write_options: dict,
+    read_options: dict,
+    schema: str | None,
+) -> DataFrame:
+    """Write ``documents`` as ``fmt``, read it back (with ``schema`` when
+    the format carries none) and return the detached ``_doc_agg``."""
+    docs = load_table(spark, sf_dir, "documents")
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+    ) as path:
+        docs.write.mode("overwrite").options(**write_options).format(
+            fmt
+        ).save(path)
+        reader = spark.read.options(**read_options).format(fmt)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return detach(_doc_agg(reader.load(path)))
 
 
 @query("source_roundtrip_csv", oracle=_DOC_AGG_ORACLE)
 def source_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
-        docs.write.mode("overwrite").option("header", True).csv(path)
-        back = (
-            spark.read.option("header", True)
-            .schema("doc_id long, text string, lang string, source string, n_chars long")
-            .csv(path)
-        )
-        out = _doc_agg(back)
-        return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    return _doc_roundtrip(
+        spark, sf_dir, "csv", {"header": True}, {"header": True}, _DOC_SCHEMA
+    )
 
 
 @query("source_roundtrip_json", oracle=_DOC_AGG_ORACLE)
 def source_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
-        docs.write.mode("overwrite").json(path)
-        back = spark.read.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        ).json(path)
-        out = _doc_agg(back)
-        return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    return _doc_roundtrip(spark, sf_dir, "json", {}, {}, _DOC_SCHEMA)
 
 
 @query("source_roundtrip_orc", oracle=_DOC_AGG_ORACLE)
@@ -93,15 +102,7 @@ def source_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle aggregates the pristine parquet, so any encode/decode drift
     (type coercion, string encoding) fails the hash. ORC files carry their
     own schema, so the read-back needs no explicit one."""
-    docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
-        docs.write.mode("overwrite").orc(path)
-        back = spark.read.orc(path)
-        out = _doc_agg(back)
-        return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    return _doc_roundtrip(spark, sf_dir, "orc", {}, {}, None)
 
 
 @query(
@@ -119,8 +120,9 @@ def source_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     file split per task, one line per record.
     """
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+    ) as path:
         docs.select("text").write.mode("overwrite").text(path)
         back = spark.read.text(path)  # column: value
         out = back.agg(
@@ -128,8 +130,6 @@ def source_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.size(F.split("value", " "))).alias("n_words"),
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -156,8 +156,9 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the same union relationally.
     """
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+    ) as path:
         new_batch = docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "lang", "n_chars"
         )
@@ -177,8 +178,6 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce("n_chars", F.lit(0))).alias("total_chars"),
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query("source_roundtrip_xml", oracle=_DOC_AGG_ORACLE)
@@ -189,32 +188,15 @@ def source_roundtrip_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     (entity escaping, whitespace handling, type coercion from the string
     payload) fails the value hash, not just a row count. rowTag is
     explicit because the XML source has no default row element."""
-    docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
-        (
-            docs.write.mode("overwrite")
-            .option("rootTag", "docs")
-            .option("rowTag", "doc")
-            .format("xml")
-            .save(path)
-        )
-        back = (
-            spark.read.option("rowTag", "doc")
-            .schema(
-                "doc_id long, text string, lang string, source string,"
-                " n_chars long"
-            )
-            .format("xml")
-            .load(path)
-        )
-        out = _doc_agg(back)
-        return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    return _doc_roundtrip(
+        spark,
+        sf_dir,
+        "xml",
+        {"rootTag": "docs", "rowTag": "doc"},
+        {"rowTag": "doc"},
+        _DOC_SCHEMA,
+    )
 
-
-N_CORRUPT = 3
 
 CORRUPT_ORACLE = """
 SELECT lang AS category,
@@ -232,45 +214,25 @@ SELECT '_corrupt' AS category, CAST(3 AS BIGINT) AS n_rows,
 """
 
 
-@query("source_corrupt_records", oracle=CORRUPT_ORACLE)
-def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bad-record quarantine: parse a CSV landing zone containing malformed
-    rows in PERMISSIVE mode and audit good rows per language plus one
-    quarantine bucket — no row may be silently dropped OR silently coerced.
-
-    The corpus is written clean, then three deterministic poison rows
-    (unparseable numerics) are appended as their own landing file. The
-    read declares ``columnNameOfCorruptRecord`` and the audit aggregates
-    EVERY data column — load-bearing, not cosmetic: Spark's CSV parser
-    prunes unreferenced columns, and a type failure in a column nobody
-    reads sets no corrupt flag at all. An audit that only touched
-    ``n_chars`` would count a row with a poisoned ``doc_id`` as good (this
-    exact miss is what the full-column aggregate pins). Good-row sums must
-    equal the pristine-parquet oracle exactly, proving corruption never
-    leaks into parsed values. 100 TB: PERMISSIVE parsing is map-side; the
-    quarantine bucket rides the same partial-agg shuffle as the audit.
-    """
+def _quarantine_audit(
+    spark: SparkSession, sf_dir: str, fmt: str, poison: list[str]
+) -> DataFrame:
+    """Write ``documents`` as ``fmt``, add ``poison`` as one more landing
+    file, read the directory back in PERMISSIVE mode with a ``_bad``
+    corrupt-record column and return the detached per-category audit."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
-        docs.write.mode("overwrite").csv(path)
-        poison = "\n".join(
-            [
-                "badid1,some text,en,web,12",
-                "badid2,more text,de,web,nochars",
-                "9.5,float id,fr,web,7",
-            ]
-        )
-        with open(f"{path}/part-poison.csv", "w", encoding="utf-8") as fh:
-            fh.write(poison + "\n")
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+    ) as path:
+        docs.write.mode("overwrite").format(fmt).save(path)
+        with open(f"{path}/part-poison.{fmt}", "w", encoding="utf-8") as fh:
+            fh.write("\n".join(poison) + "\n")
         back = (
             spark.read.option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_bad")
-            .schema(
-                "doc_id long, text string, lang string, source string,"
-                " n_chars long, _bad string"
-            )
-            .csv(path)
+            .schema(f"{_DOC_SCHEMA}, _bad string")
+            .format(fmt)
+            .load(path)
         )
         good = F.col("_bad").isNull()
 
@@ -291,8 +253,36 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             _gsum(F.length("source")).alias("total_src_len"),
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+
+
+@query("source_corrupt_records", oracle=CORRUPT_ORACLE)
+def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bad-record quarantine: parse a CSV landing zone containing malformed
+    rows in PERMISSIVE mode and audit good rows per language plus one
+    quarantine bucket — no row may be silently dropped OR silently coerced.
+
+    The corpus is written clean, then three deterministic poison rows
+    (unparseable numerics) are appended as their own landing file. The
+    read declares ``columnNameOfCorruptRecord`` and the audit aggregates
+    EVERY data column — load-bearing, not cosmetic: Spark's CSV parser
+    prunes unreferenced columns, and a type failure in a column nobody
+    reads sets no corrupt flag at all. An audit that only touched
+    ``n_chars`` would count a row with a poisoned ``doc_id`` as good (this
+    exact miss is what the full-column aggregate pins). Good-row sums must
+    equal the pristine-parquet oracle exactly, proving corruption never
+    leaks into parsed values. 100 TB: PERMISSIVE parsing is map-side; the
+    quarantine bucket rides the same partial-agg shuffle as the audit.
+    """
+    return _quarantine_audit(
+        spark,
+        sf_dir,
+        "csv",
+        [
+            "badid1,some text,en,web,12",
+            "badid2,more text,de,web,nochars",
+            "9.5,float id,fr,web,7",
+        ],
+    )
 
 
 BINARYFILE_ORACLE = """
@@ -323,8 +313,9 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     any byte is read.
     """
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+    ) as path:
         docs.select("lang", "text").write.mode("overwrite").partitionBy(
             "lang"
         ).text(path)
@@ -352,8 +343,6 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 DYN_OVERWRITE_ORACLE = """
@@ -385,8 +374,9 @@ def sink_dynamic_partition_overwrite(
     affected day too.
     """
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+    ) as path:
         docs.write.mode("overwrite").partitionBy("lang").parquet(path)
         v2 = docs.filter(F.col("lang") == "de").withColumn(
             "n_chars", F.col("n_chars") + F.lit(1_000_000)
@@ -400,8 +390,6 @@ def sink_dynamic_partition_overwrite(
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
         return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 CODEC_ORACLE = """
@@ -430,7 +418,6 @@ def sink_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately NOT in the output (they vary by build), only content.
     """
     docs = load_table(spark, sf_dir, "documents")
-    rows = []
     agg = lambda df: df.agg(  # noqa: E731
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(
@@ -441,19 +428,18 @@ def sink_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for codec in ("gzip", "snappy", "zstd"):
-        path = _scratch()
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="mr_spark_roundtrip_", ignore_cleanup_errors=True
+        ) as path:
             docs.write.mode("overwrite").option(
                 "compression", codec
             ).parquet(path)
-            a = (
-                agg(spark.read.parquet(path))
-                .select(F.lit(codec).alias("codec"), "n_docs", "checksum")
+            a = detach(
+                agg(spark.read.parquet(path)).select(
+                    F.lit(codec).alias("codec"), "n_docs", "checksum"
+                )
             )
-            a = detach(a)
-            out = a if out is None else out.unionByName(a)
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
+        out = a if out is None else out.unionByName(a)
     return out
 
 
@@ -475,47 +461,14 @@ def source_corrupt_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 1 too many). Same scale story: map-side parse, quarantine rides
     the audit's partial-agg shuffle.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    path = _scratch()
-    try:
-        docs.write.mode("overwrite").json(path)
-        poison = "\n".join(
-            [
-                '{"doc_id": 1, "text": "truncated object", "lang": "en"',
-                '{"doc_id": "notanumber", "text": "bad id", "lang": "de",'
-                ' "source": "web", "n_chars": 5}',
-                "this is not json at all",
-            ]
-        )
-        with open(f"{path}/part-poison.json", "w", encoding="utf-8") as fh:
-            fh.write(poison + "\n")
-        back = (
-            spark.read.option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_bad")
-            .schema(
-                "doc_id long, text string, lang string, source string,"
-                " n_chars long, _bad string"
-            )
-            .json(path)
-        )
-        good = F.col("_bad").isNull()
-
-        def _gsum(col):
-            return F.coalesce(F.sum(F.when(good, col)), F.lit(0)).cast(
-                "long"
-            )
-
-        out = back.groupBy(
-            F.when(~good, "_corrupt").otherwise(F.col("lang")).alias(
-                "category"
-            )
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            _gsum(F.col("n_chars")).alias("total_chars"),
-            _gsum(F.col("doc_id")).alias("sum_doc_id"),
-            _gsum(F.length("text")).alias("total_text_len"),
-            _gsum(F.length("source")).alias("total_src_len"),
-        )
-        return detach(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    return _quarantine_audit(
+        spark,
+        sf_dir,
+        "json",
+        [
+            '{"doc_id": 1, "text": "truncated object", "lang": "en"',
+            '{"doc_id": "notanumber", "text": "bad id", "lang": "de",'
+            ' "source": "web", "n_chars": 5}',
+            "this is not json at all",
+        ],
+    )

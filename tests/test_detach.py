@@ -134,3 +134,130 @@ e = out.collect()
 """
     assert list(_collect_round_trips(flagged)) == [2, 3]
     assert list(_collect_round_trips(clean)) == []
+
+
+def _enclosing_calls(tree: ast.AST, attr: str):
+    """(top-level function name, lineno) of every ``<x>.attr(...)`` or
+    bare ``attr(...)`` call; module-level calls report ``<module>``."""
+    def is_call(node):
+        return isinstance(node, ast.Call) and (
+            (isinstance(node.func, ast.Attribute) and node.func.attr == attr)
+            or (isinstance(node.func, ast.Name) and node.func.id == attr)
+        )
+
+    for top in tree.body:
+        owner = (
+            top.name
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+            else "<module>"
+        )
+        for node in ast.walk(top):
+            if is_call(node):
+                yield owner, node.lineno
+
+
+def _package_sites(attr: str) -> dict[str, str]:
+    return {
+        f"{py.relative_to(PACKAGE.parent)}:{lineno}": owner
+        for py in sorted(PACKAGE.rglob("*.py"))
+        for owner, lineno in _enclosing_calls(ast.parse(py.read_text()), attr)
+    }
+
+
+def test_package_has_one_scratch_idiom():
+    """Scratch dirs are ``with tempfile.TemporaryDirectory(...)`` blocks.
+    Only the two streaming sinks whose lazily-read output must outlive the
+    call make a dir with ``mkdtemp``, and only the exit hook removes those."""
+    mkdtemp = {
+        site: owner
+        for site, owner in _package_sites("mkdtemp").items()
+        if owner not in ("_run_to_parquet", "stream_asof_enrich")
+    }
+    assert not mkdtemp, f"use tempfile.TemporaryDirectory: {mkdtemp}"
+    rmtree = {
+        site: owner
+        for site, owner in _package_sites("rmtree").items()
+        if owner != "_cleanup_out_scratch"
+    }
+    assert not rmtree, f"use tempfile.TemporaryDirectory: {rmtree}"
+
+
+def _returns_in_scratch_blocks(tree: ast.AST):
+    """Each ``return`` inside a ``TemporaryDirectory`` with-block (nested
+    function bodies excluded) as (lineno, returns detach(...))."""
+    def walk(nodes):
+        for node in nodes:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+            ):
+                continue
+            if isinstance(node, ast.Return):
+                value = node.value
+                yield node.lineno, (
+                    isinstance(value, ast.Call)
+                    and isinstance(value.func, ast.Name)
+                    and value.func.id == "detach"
+                )
+            yield from walk(ast.iter_child_nodes(node))
+
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.With, ast.AsyncWith)) and any(
+            isinstance(item.context_expr, ast.Call)
+            and isinstance(item.context_expr.func, ast.Attribute)
+            and item.context_expr.func.attr == "TemporaryDirectory"
+            for item in node.items
+        ):
+            yield from walk(node.body)
+
+
+def test_batch_scratch_results_are_detached():
+    """A frame returned from inside a scratch block is read after the dir
+    is gone, so in the batch keys it must be a detached local table."""
+    lazy = [
+        f"{py.relative_to(PACKAGE.parent)}:{lineno}"
+        for sub in ("sources", "operators")
+        for py in sorted((PACKAGE / sub).rglob("*.py"))
+        for lineno, detached in _returns_in_scratch_blocks(
+            ast.parse(py.read_text())
+        )
+        if not detached
+    ]
+    assert not lazy, "return detach(...) in a scratch block:\n" + "\n".join(lazy)
+
+
+def test_the_scratch_lints_see_their_shapes():
+    """Guard the scanners on the shapes they must flag and pass."""
+    src = """
+import shutil, tempfile
+from tempfile import mkdtemp
+X = mkdtemp()
+def keep(spark):
+    with tempfile.TemporaryDirectory(prefix="p") as d:
+        def cb(b):
+            return b
+        return detach(read(d))
+def lazy(spark):
+    with tempfile.TemporaryDirectory(prefix="p") as d:
+        if spark:
+            return spark.read.parquet(d)
+        shutil.rmtree(d)
+"""
+    tree = ast.parse(src)
+    assert list(_enclosing_calls(tree, "mkdtemp")) == [("<module>", 4)]
+    assert list(_enclosing_calls(tree, "rmtree")) == [("lazy", 14)]
+    assert list(_returns_in_scratch_blocks(tree)) == [(9, True), (13, False)]
+
+
+def test_storage_keys_build_the_plans_the_plan_tests_check():
+    """test_plans checks the DPP and Bloom plans through their helpers;
+    the keys must build their plans through the same helpers."""
+    from mapreduce_6_824_lab1_spark.manifest import package_call_closure
+    from mapreduce_6_824_lab1_spark.operators import storage
+
+    for key, helper in (
+        ("join_partition_pruned", storage.dpp_plan_frame),
+        ("join_bloom_pruned", storage.bloom_plan_frame),
+        ("join_bucketed", storage.bucketed_join_frame),
+    ):
+        closure = {obj for _ident, obj in package_call_closure(QUERIES[key])}
+        assert helper in closure, (key, helper.__name__)

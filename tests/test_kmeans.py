@@ -4,41 +4,15 @@ centroid id)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow.parquet as pq
-
 from mapreduce_6_824_lab1_spark import QUERIES
 from mapreduce_6_824_lab1_spark.operators.kmeans import ITERATIONS, K
 from tests.conftest import SF_DIR
-
-
-def _numpy_kmeans():
-    t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
-    vec_ids = t["vec_id"].to_numpy()
-    X = np.array(t["embedding"].to_pylist(), dtype="float64")
-    order = np.argsort(vec_ids)
-    X = X[order]
-    vec_ids = vec_ids[order]
-    cents = X[vec_ids < K].copy()
-    for _ in range(ITERATIONS):
-        d = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        cid = d.argmin(axis=1)  # argmin takes the first (lowest cid) on ties
-        cents = np.array(
-            [
-                X[cid == c].mean(axis=0) if (cid == c).any() else cents[c]
-                for c in range(K)
-            ]
-        )
-    d = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-    cid = d.argmin(axis=1)
-    counts = {c: int((cid == c).sum()) for c in range(K) if (cid == c).any()}
-    norms = {c: float(np.sqrt((cents[c] ** 2).sum())) for c in counts}
-    return counts, norms
+from tools.replay_sf1 import _numpy_kmeans
 
 
 def test_kmeans_matches_numpy_reference(spark):
     rows = QUERIES["kmeans_embeddings"](spark, SF_DIR).collect()
-    counts, norms = _numpy_kmeans()
+    counts, norms = _numpy_kmeans(SF_DIR, K, ITERATIONS)
     got_counts = {r.cid: r.n_members for r in rows}
     assert got_counts == counts
     for r in rows:

@@ -3,8 +3,6 @@ identical greedy algorithm in pure Python."""
 
 from __future__ import annotations
 
-from collections import Counter
-
 import pandas as pd
 
 from mapreduce_6_824_lab1_spark import QUERIES
@@ -13,36 +11,7 @@ from mapreduce_6_824_lab1_spark.operators.curation import (
     BPE_MERGES,
 )
 from tests.conftest import SF_DIR
-
-
-def _python_bpe(corpus: list[list[str]], k: int):
-    merges = []
-    toks = [list(t) for t in corpus]
-    for step in range(1, k + 1):
-        counts = Counter()
-        for t in toks:
-            counts.update(zip(t, t[1:]))
-        if not counts:
-            break
-        # max count, ties broken lexicographically — same as the operator
-        (x, y), c = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if c < 2:
-            break
-        merged = f"{x}{BPE_JOIN}{y}"
-        merges.append((step, x, y, merged, c))
-        out = []
-        for t in toks:
-            acc: list[str] = []
-            for tok in t:
-                if acc and acc[-1] == x and tok == y:
-                    acc[-1] = merged
-                else:
-                    acc.append(tok)
-            out.append(acc)
-        toks = out
-    return merges
+from tools.replay_sf1 import _python_bpe
 
 
 def test_bpe_merges_match_python(spark):
@@ -52,7 +21,9 @@ def test_bpe_merges_match_python(spark):
         .sort_values("step", ignore_index=True)
     )
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
-    ref = _python_bpe([t.split(" ") for t in docs["text"]], BPE_MERGES)
+    ref = _python_bpe(
+        [t.split(" ") for t in docs["text"]], BPE_MERGES, BPE_JOIN
+    )
     assert len(got) == len(ref) == BPE_MERGES
     for (step, x, y, merged, c), (_, row) in zip(ref, got.iterrows()):
         assert row["step"] == step
@@ -87,7 +58,9 @@ def test_bpe_survives_hostile_tokens(spark, tmp_path):
         .toPandas()
         .sort_values("step", ignore_index=True)
     )
-    ref = _python_bpe([t.split(" ") for t in docs["text"]], BPE_MERGES)
+    ref = _python_bpe(
+        [t.split(" ") for t in docs["text"]], BPE_MERGES, BPE_JOIN
+    )
     assert [tuple(r) for r in got.itertuples(index=False)] == ref
     # the hostile characters actually reached the adopted merges
     assert any("'" in x or "\\" in x for _, x, _, _, _ in ref)

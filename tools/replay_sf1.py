@@ -50,7 +50,8 @@ RECORD10 = os.path.join(REPO, "PARITY_SF10.md")
 
 
 def _numpy_kmeans(sf_dir: str, k: int, iterations: int):
-    """Independent Lloyd's replay — mirrors tests/test_kmeans.py."""
+    """Independent Lloyd's replay — tests/test_kmeans.py pins the operator
+    against it at sf0.01."""
     t = pq.read_table(f"{sf_dir}/embeddings.parquet")
     vec_ids = t["vec_id"].to_numpy()
     X = np.array(t["embedding"].to_pylist(), dtype="float64")
@@ -83,7 +84,8 @@ def _numpy_kmeans(sf_dir: str, k: int, iterations: int):
 
 
 def _python_bpe(corpus, k: int, join: str):
-    """Exact BPE replay — mirrors tests/test_round4h.py."""
+    """Exact BPE replay — tests/test_round4h.py pins the operator against
+    it at sf0.01."""
     merges = []
     toks = [list(t) for t in corpus]
     for step in range(1, k + 1):
