@@ -97,7 +97,7 @@ RUNTIME_CLUSTER_CONF: dict[str, str] = {
 #: - unloadOnCommit=false + maintenance interval: keep stores cached
 #:   between batches; compaction happens off the critical path.
 #: - shuffle partitions are FROZEN into the state layout at first start
-#:   (streaming/jobs.py STATE_PARTITIONS documents the local choice) —
+#:   (session.core_partitions carries the local rule: one wave of cores) —
 #:   size to target steady-state parallelism before the first checkpoint,
 #:   because changing it later means rebuilding state.
 STREAMING_CLUSTER_CONF: dict[str, str] = {

@@ -622,11 +622,11 @@ def connected_components(
 
     ``loop_partitions`` sizes the per-round shuffles: iteration state is
     NODE-grain (tiny next to the corpus), and an untuned 200-partition
-    default turns every round into hundreds of near-empty tasks — the
-    same deliberate-sizing rule as the streaming STATE_PARTITIONS
-    (streaming/jobs.py). It is sized from the measured pair count (~50k
-    pairs per partition, floor 4, cap 200) — the count is free because
-    ``pairs`` must be materialized anyway (see below).
+    default turns every round into hundreds of near-empty tasks. Unlike
+    the one-wave ``session.core_partitions`` rule of the other loops, it
+    is sized from the measured pair count (~50k pairs per partition,
+    floor 4, cap 200) — the count is free because ``pairs`` must be
+    materialized anyway (see below).
 
     ``pairs`` is persisted and counted BEFORE the union-reverse builds the
     edge list: the union's two branches otherwise each re-execute the

@@ -88,14 +88,14 @@ FROM r{PR_ITERATIONS}
 def pagerank_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Damped PageRank (d=0.85, 3 fixed iterations) over the source graph.
 
-    Iteration shuffles are scoped to a node-grain partition count (the
-    connected_components / STATE_PARTITIONS sizing rule): rank state is
-    |V| rows, and an untuned 200-partition default turns each of the 3
-    iterations into hundreds of near-empty tasks in a vanilla session.
+    Iteration shuffles are scoped to one wave of cores
+    (``session.core_partitions``): rank state is |V| rows, and an untuned
+    200-partition default turns each of the 3 iterations into hundreds of
+    near-empty tasks in a vanilla session.
     """
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
+    from mapreduce_6_824_lab1_spark.session import core_partitions
 
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "16"}):
+    with core_partitions(spark):
         return _pagerank_impl(spark, sf_dir)
 
 
@@ -387,9 +387,9 @@ def graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-diameter graphs never pay MAX_HOPS joins. Driver involvement
     per hop is one empty-check on a node-grain frame — no fact-grain
     collect."""
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
+    from mapreduce_6_824_lab1_spark.session import core_partitions
 
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "16"}):
+    with core_partitions(spark):
         return _bfs_impl(spark, sf_dir)
 
 

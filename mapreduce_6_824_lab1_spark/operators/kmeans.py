@@ -135,12 +135,12 @@ def recompute(assigned: DataFrame) -> DataFrame:
 @query("kmeans_embeddings")  # rows-only: float accumulation order is
 # engine-specific; verified against a numpy reference in tests instead
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # iteration shuffles are centroid/assignment-grain: scope them to a
-    # small partition count (the connected_components sizing rule) so a
-    # vanilla 200-partition session doesn't run near-empty tasks per round
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
+    # iteration shuffles are centroid/assignment-grain: scope them to one
+    # wave of cores (session.core_partitions) so a vanilla 200-partition
+    # session doesn't run near-empty tasks per round
+    from mapreduce_6_824_lab1_spark.session import core_partitions
 
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "16"}):
+    with core_partitions(spark):
         return _kmeans_impl(spark, sf_dir)
 
 

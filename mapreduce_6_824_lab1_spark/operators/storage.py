@@ -119,6 +119,19 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+def partitioned_sink_frame(
+    spark: SparkSession, sf_dir: str, path: str
+) -> DataFrame:
+    """Write orders under ``path`` partitioned by ``o_year`` and return the
+    read-back filtered to 1997, whose scan prunes by directory — the plan
+    tests/test_plans.py asserts on, and ``sink_partitioned_parquet``
+    aggregates. The caller owns removing ``path``."""
+    load_table(spark, sf_dir, "orders").withColumn(
+        "o_year", F.year("o_orderdate")
+    ).write.partitionBy("o_year").mode("overwrite").parquet(path)
+    return spark.read.parquet(path).filter(F.col("o_year") == 1997)
+
+
 @query(
     "sink_partitioned_parquet",
     oracle=f"""
@@ -138,18 +151,10 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB fact table makes time-range queries scan-proportional to the
     range, not the table.
     """
-    o = load_table(spark, sf_dir, "orders")
     with tempfile.TemporaryDirectory(
         prefix="mr_spark_part_", ignore_cleanup_errors=True
     ) as path:
-        (
-            o.withColumn("o_year", F.year("o_orderdate"))
-            .write.partitionBy("o_year")
-            .mode("overwrite")
-            .parquet(path)
-        )
-        back = spark.read.parquet(path).filter(F.col("o_year") == 1997)
-        out = back.groupBy(
+        out = partitioned_sink_frame(spark, sf_dir, path).groupBy(
             F.month("o_orderdate").cast("long").alias("o_month")
         ).agg(
             F.count(F.lit(1)).alias("n_orders"),

@@ -131,3 +131,32 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@contextmanager
+def core_partitions(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to one wave of cores
+    (``defaultParallelism``) for a block — the sizing rule for shuffles
+    whose state is small next to the corpus: streaming state stores,
+    and the per-round shuffles of iterative loops (BFS frontier,
+    PageRank ranks, k-means assignments).
+
+    - Each shuffle partition costs a fixed amount per task, whatever it
+      holds: a task launch, and for a stateful stream a state-store
+      load and commit per micro-batch (plus a Python worker round-trip
+      under ``applyInPandasWithState``). On node-, centroid- or
+      aggregate-grain state that fixed cost dominates, so more than one
+      wave of tasks only adds idle work (``stream_tumbling``: ~0.05
+      CPU-s per state partition per run on 4 cores). An untuned
+      200-partition default is 200 such tasks per round.
+    - A streaming query freezes its state partitioning into the
+      checkpoint at first start; changing it later means rebuilding the
+      state. So size it once, from the parallelism the query runs on,
+      never from the session default.
+
+    Shuffles whose volume scales with the data size themselves from it
+    instead (``connected_components`` sizes its loop from the pair
+    count)."""
+    cores = spark.sparkContext.defaultParallelism
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(cores)}):
+        yield

@@ -61,29 +61,18 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events(src)
 
 
-# State-store partition count for the fixture streams. A streaming query
-# fixes its state partitioning from ``spark.sql.shuffle.partitions`` at
-# first start — an untuned 200-partition default means 200 state tasks
-# (each a Python worker round-trip for applyInPandasWithState) PER
-# MICRO-BATCH regardless of data volume: pure overhead at fixture scale,
-# and a real sizing decision at 100 TB (state partitions should track
-# executor parallelism and state volume, and cannot be changed after the
-# first checkpoint — size them deliberately, never by default).
-STATE_PARTITIONS = 16
-
-
 def _run_to_memory(df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
     """Drain a streaming DataFrame into a memory sink and return the table.
 
     The streaming plan is only materialized at ``start()``, so scoping the
-    shuffle-partition override here covers every stream in the module; the
-    previous value is restored before any downstream batch aggregation of
-    the sink table runs.
+    state partitioning (``session.core_partitions``) here covers every
+    stream in the module; the session's own value is back before any
+    downstream batch aggregation of the sink table runs.
     """
+    from mapreduce_6_824_lab1_spark.session import core_partitions
+
     name = f"mr_stream_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-    try:
+    with core_partitions(spark):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -92,8 +81,6 @@ def _run_to_memory(df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -125,7 +112,7 @@ atexit.register(_cleanup_out_scratch)
 def _run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Drain an append-mode stream into a PARQUET file sink and return a
     lazy batch read of it (see the sink-grain ruling above). Same
-    STATE_PARTITIONS scoping as ``_run_to_memory``, via scoped_conf.
+    ``core_partitions`` state sizing as ``_run_to_memory``.
 
     Disk bound: one result copy per invocation lives until interpreter
     exit — deliberate; the returned frame is LAZY, so an eager rmtree of
@@ -139,13 +126,11 @@ def _run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     data files, and schema inference over a data-less sink dir would
     raise where the memory sink returned an empty, correctly-typed
     table."""
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
+    from mapreduce_6_824_lab1_spark.session import core_partitions
 
     out = tempfile.mkdtemp(prefix="mr_stream_out_")
     _OUT_SCRATCH.append(out)
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
-    ):
+    with core_partitions(spark):
         q = (
             df.writeStream.format("parquet")
             .option("path", f"{out}/data")

@@ -249,8 +249,9 @@ def lazy(spark):
 
 
 def test_storage_keys_build_the_plans_the_plan_tests_check():
-    """test_plans checks the DPP and Bloom plans through their helpers;
-    the keys must build their plans through the same helpers."""
+    """test_plans checks the DPP, Bloom, bucketed and partitioned-sink
+    plans through their helpers; the keys must build their plans through
+    the same helpers."""
     from mapreduce_6_824_lab1_spark.manifest import package_call_closure
     from mapreduce_6_824_lab1_spark.operators import storage
 
@@ -258,6 +259,7 @@ def test_storage_keys_build_the_plans_the_plan_tests_check():
         ("join_partition_pruned", storage.dpp_plan_frame),
         ("join_bloom_pruned", storage.bloom_plan_frame),
         ("join_bucketed", storage.bucketed_join_frame),
+        ("sink_partitioned_parquet", storage.partitioned_sink_frame),
     ):
         closure = {obj for _ident, obj in package_call_closure(QUERIES[key])}
         assert helper in closure, (key, helper.__name__)

@@ -3,6 +3,9 @@ the generic lab-shaped map_reduce runner and the multimodal codec stubs."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from mapreduce_6_824_lab1_spark.catalog import load_table
@@ -11,7 +14,10 @@ from mapreduce_6_824_lab1_spark.operators.multimodal import (
     decode_image_batch,
     sample_video_frames,
 )
+from mapreduce_6_824_lab1_spark.session import scoped_conf
 from tests.conftest import SF_DIR
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def test_map_reduce_runs_arbitrary_user_functions(spark):
@@ -85,17 +91,142 @@ def test_cluster_profile_applies(spark):
                 spark.conf.unset(k)
 
 
-def test_stream_runner_restores_shuffle_partitions(spark):
-    # _run_to_memory pins state-store partitioning (STATE_PARTITIONS) for
-    # the duration of the stream only; the session's own setting must be
-    # back before any subsequent batch query plans.
-    from mapreduce_6_824_lab1_spark import QUERIES
-    from mapreduce_6_824_lab1_spark.streaming.jobs import STATE_PARTITIONS
+def _off_core_partitions(spark):
+    """Move the session's shuffle-partition count off one wave of cores,
+    so a runner that keeps the session value, or pins any other count,
+    shows."""
+    cores = spark.sparkContext.defaultParallelism
+    return scoped_conf(spark, {SHUFFLE_PARTITIONS: str(cores + 3)})
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    assert before != str(STATE_PARTITIONS)  # the test would be vacuous
-    QUERIES["stream_grep"](spark, SF_DIR).count()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+def test_stream_runner_restores_shuffle_partitions(spark):
+    # both stream runners (_run_to_memory under stream_tumbling,
+    # _run_to_parquet under stream_grep) size state partitions for the
+    # stream only; the session's own setting must be back before any
+    # subsequent batch query plans.
+    from mapreduce_6_824_lab1_spark import QUERIES
+
+    with _off_core_partitions(spark):
+        before = spark.conf.get(SHUFFLE_PARTITIONS)
+        for key in ("stream_tumbling", "stream_grep"):
+            QUERIES[key](spark, SF_DIR).count()
+            assert spark.conf.get(SHUFFLE_PARTITIONS) == before, key
+
+
+def test_stream_state_partitions_are_one_wave_of_cores(spark):
+    """session.core_partitions: a stateful stream's state store gets
+    ``defaultParallelism`` partitions, whatever the session default."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from mapreduce_6_824_lab1_spark import QUERIES
+
+    seen: list[int] = []
+    done: list[bool] = []
+
+    class _StatePartitions(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen.extend(
+                op.numShufflePartitions for op in event.progress.stateOperators
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            done.append(True)
+
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        with _off_core_partitions(spark):
+            QUERIES["stream_tumbling"](spark, SF_DIR).count()
+        # listener events arrive asynchronously
+        deadline = time.monotonic() + 30
+        while not done and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert done and seen
+    assert set(seen) == {spark.sparkContext.defaultParallelism}, seen
+
+
+def _literal_shuffle_partition_values(tree: ast.Module) -> list[int]:
+    """Line numbers where ``spark.sql.shuffle.partitions`` is given a
+    fixed value: a string literal, or ``str()`` of a literal or of a
+    module-level constant, as a dict entry or as a call's second
+    argument (``conf.set``, ``.config``)."""
+    consts = {
+        t.id
+        for node in tree.body
+        if isinstance(node, ast.Assign) and isinstance(node.value, ast.Constant)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+
+    def fixed(v: ast.AST) -> bool:
+        if isinstance(v, ast.Constant):
+            return True
+        return (
+            isinstance(v, ast.Call)
+            and isinstance(v.func, ast.Name)
+            and v.func.id == "str"
+            and len(v.args) == 1
+            and (
+                isinstance(v.args[0], ast.Constant)
+                or (isinstance(v.args[0], ast.Name) and v.args[0].id in consts)
+            )
+        )
+
+    def is_key(k) -> bool:
+        return isinstance(k, ast.Constant) and k.value == SHUFFLE_PARTITIONS
+
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Dict):
+            hits += [
+                v.lineno
+                for k, v in zip(node.keys, node.values)
+                if is_key(k) and fixed(v)
+            ]
+        elif (
+            isinstance(node, ast.Call)
+            and len(node.args) == 2
+            and is_key(node.args[0])
+            and fixed(node.args[1])
+        ):
+            hits.append(node.lineno)
+    return sorted(hits)
+
+
+def test_no_fixed_shuffle_partition_pins():
+    """Operators and streams size shuffles from the cores
+    (session.core_partitions) or from the data, never from a constant."""
+    shapes = """
+PINNED = 16
+def f(spark, n):
+    cores = spark.sparkContext.defaultParallelism
+    scoped_conf(spark, {"spark.sql.shuffle.partitions": "16"})
+    spark.conf.set("spark.sql.shuffle.partitions", str(PINNED))
+    scoped_conf(spark, {"spark.sql.shuffle.partitions": str(8)})
+    scoped_conf(spark, {"spark.sql.shuffle.partitions": str(cores)})
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+"""
+    assert _literal_shuffle_partition_values(ast.parse(shapes)) == [5, 6, 7]
+    pkg = Path(__file__).resolve().parent.parent / "mapreduce_6_824_lab1_spark"
+    bad = [
+        f"{path.relative_to(pkg)}:{line}"
+        for sub in ("operators", "streaming")
+        for path in sorted((pkg / sub).glob("*.py"))
+        for line in _literal_shuffle_partition_values(
+            ast.parse(path.read_text(encoding="utf-8"))
+        )
+    ]
+    assert not bad, bad
 
 
 # ---------------------------------------------------------------------------

@@ -187,23 +187,17 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_partitioned_sink_prunes_partitions(spark):
-    # inspect the pruned scan directly (the query returns a detached frame)
-    import shutil
+    # inspect the pruned scan of the key's own write/read helper (the
+    # query returns a detached frame)
     import tempfile
-    from pyspark.sql import functions as F
-    from mapreduce_6_824_lab1_spark.catalog import load_table
+    from mapreduce_6_824_lab1_spark.operators.storage import (
+        partitioned_sink_frame,
+    )
 
-    o = load_table(spark, SF_DIR, "orders")
-    path = tempfile.mkdtemp(prefix="mr_plan_part_")
-    try:
-        o.withColumn("o_year", F.year("o_orderdate")).write.partitionBy(
-            "o_year"
-        ).mode("overwrite").parquet(path)
-        back = spark.read.parquet(path).filter(F.col("o_year") == 1997)
+    with tempfile.TemporaryDirectory(prefix="mr_plan_part_") as path:
+        back = partitioned_sink_frame(spark, SF_DIR, path)
         plan = formatted_plan(back)
         assert "PartitionFilters" in plan and "o_year" in plan, plan
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_q6_predicates_push_to_scan(spark):
