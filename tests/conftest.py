@@ -1,17 +1,16 @@
 """Shared fixtures: one SparkSession, one DuckDB connection with the fixture
-views registered, and the oracle-parity comparator that mirrors the driver's
-check (row count + schema names + order-insensitive value comparison)."""
+views registered, and ``assert_parity``, a thin assert over the package's one
+oracle comparator (``oracle.compare_frames``: column names, row count,
+int/float dtype splits, order-insensitive values) — the same check that
+``verify``, ``tools/driver_sim.py`` and ``tools/parity_sf1.py`` run."""
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
-import pandas as pd
 import pytest
 
-from mapreduce_6_824_lab1_spark import TABLES
+from mapreduce_6_824_lab1_spark.oracle import compare_frames, fixture_views
 from mapreduce_6_824_lab1_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -27,62 +26,13 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = fixture_views(SF_DIR)
     yield con
     con.close()
 
 
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name, then rows by all columns — order-insensitive."""
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    if len(pdf):
-        pdf = pdf.sort_values(by=list(pdf.columns), kind="mergesort")
-    return pdf.reset_index(drop=True)
-
-
-def assert_parity(spark_df, sql: str, duck_con, atol: float = 1e-6) -> None:
-    """Driver-style comparison of a Spark result vs a DuckDB oracle result."""
-    got = _normalize(spark_df.toPandas())
-    want = _normalize(duck_con.execute(sql).df())
-    assert sorted(got.columns) == sorted(want.columns), (
-        f"column mismatch: spark={sorted(got.columns)} oracle={sorted(want.columns)}"
-    )
-    assert len(got) == len(want), f"row count: spark={len(got)} oracle={len(want)}"
-    for col in got.columns:
-        g, w = got[col], want[col]
-        # The driver hashes raw values, so an int64 Spark column vs a
-        # float64 oracle column (e.g. DuckDB HUGEINT sums going through
-        # pandas) hash-mismatches even when numerically equal. Mirror that:
-        # an int/float dtype split is a hard failure, not a tolerance case.
-        g_int = pd.api.types.is_integer_dtype(g)
-        w_int = pd.api.types.is_integer_dtype(w)
-        g_flt = pd.api.types.is_float_dtype(g)
-        w_flt = pd.api.types.is_float_dtype(w)
-        assert not ((g_int and w_flt) or (g_flt and w_int)), (
-            f"dtype mismatch in column {col!r}: spark={g.dtype} vs "
-            f"oracle={w.dtype} — driver hash compare would fail; cast the "
-            f"oracle (e.g. CAST(sum(...) AS BIGINT)) or the Spark side"
-        )
-        if g_flt or w_flt:
-            g = pd.to_numeric(g, errors="coerce").astype(float)
-            w = pd.to_numeric(w, errors="coerce").astype(float)
-            bad = [
-                i
-                for i, (x, y) in enumerate(zip(g, w))
-                if not (
-                    (math.isnan(x) and math.isnan(y)) or abs(x - y) <= atol
-                )
-            ]
-        else:
-            gs = g.astype(str)
-            ws = w.astype(str)
-            bad = [i for i, (x, y) in enumerate(zip(gs, ws)) if x != y]
-        assert not bad, (
-            f"value mismatch in column {col!r} at rows {bad[:5]} "
-            f"(spark={[got[col].iloc[i] for i in bad[:5]]}, "
-            f"oracle={[want[col].iloc[i] for i in bad[:5]]})"
-        )
+def assert_parity(spark_df, sql: str, duck_con) -> None:
+    """Tier-1's oracle check: ``compare_frames`` of a Spark result vs the
+    DuckDB result of ``sql``."""
+    msg = compare_frames(spark_df.toPandas(), duck_con.execute(sql).fetchdf())
+    assert msg is None, msg

@@ -8,11 +8,11 @@ under-provisioned reducer count)."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_6_824_lab1_spark import ORACLES, QUERIES
+from mapreduce_6_824_lab1_spark.oracle import fixture_views
 from mapreduce_6_824_lab1_spark.session import scoped_conf
 
 SF01 = "/root/testdata/sf0.1"
@@ -64,12 +64,7 @@ def test_dedup_ngram_jaccard_low_partitions_sf01(spark, partitions):
     with _conf(spark, spark__sql__shuffle__partitions=partitions):
         df = QUERIES["dedup_ngram_jaccard"](spark, SF01)
         got = df.count()
-    con = duckdb.connect()
-    for t in ("documents",):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF01}/{t}.parquet')"
-        )
+    con = fixture_views(SF01)
     want = len(con.execute(ORACLES["dedup_ngram_jaccard"]).df())
     con.close()
     assert got == want and got > 0
@@ -84,11 +79,7 @@ def test_agg_skew_salted_low_partitions_sf01(spark):
             r.event_type: (r.n_events, r.total_value, r.max_value)
             for r in QUERIES["agg_skew_salted"](spark, SF01).collect()
         }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{SF01}/events.parquet')"
-    )
+    con = fixture_views(SF01)
     plain = {
         r.event_type: (int(r.n_events), r.total_value, r.max_value)
         for r in con.execute(ORACLES["agg_skew_salted"]).df().itertuples()

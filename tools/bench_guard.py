@@ -24,7 +24,7 @@ still trip it once they cost half a second of extra wall-clock.
 The comparison logic lives in :func:`check` so tests can prove the guard
 actually fires (tests/test_bench_guard.py fabricates a regression and
 asserts it is caught — the same mutation-testing discipline as
-driver_sim.compare_frames).
+oracle.compare_frames).
 """
 
 from __future__ import annotations

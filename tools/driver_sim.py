@@ -1,75 +1,39 @@
 """Driver simulation: vanilla SparkSession + DuckDB oracle over ALL keys.
 
 Mirrors the round driver's contract (entry smoke at sf0.001, every
-queries() key vs oracle_sql() at sf0.01) but STRICTER: per-column dtype
-comparison, not just stringified value hash.
+queries() key vs oracle_sql()) with the package's one oracle check,
+``oracle.check_key``: it compares per-column dtypes, not just a
+stringified value hash, and is the same check tier-1 and ``verify`` run.
+``compare_frames`` is re-exported here for perfbench's check pass.
 
 Usage (run FROM the repo root — worker imports resolve against cwd):
-    python tools/driver_sim.py            # full registry, ~4-6 min
+    python tools/driver_sim.py            # full registry at sf0.01
     python tools/driver_sim.py key1 key2  # just those keys
+    python tools/driver_sim.py --sf-dir DIR key1  # at another scale
 Exit code 0 = all clean; failures are listed at the end.
 """
+import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession  # noqa: E402
 
-SF001 = "/root/testdata/sf0.001"
+from mapreduce_6_824_lab1_spark.oracle import (  # noqa: E402,F401
+    check_key,
+    compare_frames,
+    fixture_views,
+)
+
 SF01 = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif np.issubdtype(df[c].dtype, np.floating):
-            df[c] = df[c].round(6)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-def compare_frames(sdf: pd.DataFrame, odf: pd.DataFrame) -> str | None:
-    """Driver-style compare of a Spark result vs an oracle result after
-    ``norm`` — returns a failure message or None. Factored out of main()
-    so tests/test_harness_mutation.py can prove each divergence class is
-    DETECTED by this script too, not only by conftest.assert_parity."""
-    a, b = norm(sdf), norm(odf)
-    if list(a.columns) != list(b.columns):
-        return f"columns {list(a.columns)} vs {list(b.columns)}"
-    if len(a) != len(b):
-        return f"rowcount {len(a)} vs {len(b)}"
-    for c in a.columns:
-        ai, bi = np.issubdtype(a[c].dtype, np.integer), np.issubdtype(
-            b[c].dtype, np.integer
-        )
-        af, bf = np.issubdtype(a[c].dtype, np.floating), np.issubdtype(
-            b[c].dtype, np.floating
-        )
-        if (ai and bf) or (af and bi):
-            return f"dtype split on {c}: {a[c].dtype} vs {b[c].dtype}"
-    if not a.equals(b):
-        for c in a.columns:
-            if not a[c].equals(b[c]):
-                if np.issubdtype(a[c].dtype, np.floating):
-                    if np.allclose(a[c], b[c], atol=1e-6, equal_nan=True):
-                        continue
-                return f"values differ in {c}"
-        return "frames differ (ordering?)"
-    return None
 
 
 def main() -> None:
-    only = set(sys.argv[1:])
+    ap = argparse.ArgumentParser(prog="driver_sim")
+    ap.add_argument("keys", nargs="*", help="only these keys (default: all)")
+    ap.add_argument("--sf-dir", default=SF01, help="fixture directory")
+    args = ap.parse_args()
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.ui.enabled", "false")
@@ -82,43 +46,25 @@ def main() -> None:
     assert n >= 0, "entry() smoke failed"
     print(f"entry() smoke: {n} rows", flush=True)
 
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF01}/{t}.parquet'"
-        )
-
-    qs, os_ = E.queries(), E.oracle_sql()
-    keys = sorted(qs) if not only else sorted(only)
+    duck = fixture_views(args.sf_dir)
+    oracles = E.oracle_sql()
+    keys = sorted(args.keys or E.queries())
     fails = []
     for i, k in enumerate(keys):
-        t0 = time.time()
+        tag = f"[{i+1}/{len(keys)}] {k}"
         try:
-            sdf = qs[k](spark, SF01).toPandas()
+            c = check_key(spark, k, args.sf_dir, duck)
         except Exception as ex:
             fails.append((k, f"spark-error: {ex}"))
-            print(f"[{i+1}/{len(keys)}] {k}: SPARK ERROR {ex}", flush=True)
+            print(f"{tag}: SPARK ERROR {ex}", flush=True)
             continue
-        if k not in os_:
-            print(
-                f"[{i+1}/{len(keys)}] {k}: rows-only {len(sdf)} rows "
-                f"({time.time()-t0:.1f}s)",
-                flush=True,
-            )
-            if len(sdf) == 0:
-                fails.append((k, "rows-only returned 0 rows"))
-            continue
-        odf = duck.execute(os_[k]).fetchdf()
-        msg = compare_frames(sdf, odf)
-        if msg:
-            fails.append((k, msg))
-            print(f"[{i+1}/{len(keys)}] {k}: FAIL {msg}", flush=True)
+        if c.failure:
+            fails.append((k, c.failure))
+            print(f"{tag}: FAIL {c.failure}", flush=True)
         else:
-            print(
-                f"[{i+1}/{len(keys)}] {k}: ok {len(sdf)} rows "
-                f"({time.time()-t0:.1f}s)",
-                flush=True,
-            )
+            kind = "ok" if k in oracles else "rows-only"
+            secs = c.spark_s + c.oracle_s
+            print(f"{tag}: {kind} {c.rows} rows ({secs:.1f}s)", flush=True)
 
     print(f"\n=== {len(keys)-len(fails)}/{len(keys)} clean ===")
     for k, m in fails:

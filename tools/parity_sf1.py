@@ -6,9 +6,9 @@ against their own DuckDB oracles on the 10x replicas in
 ``scaled_data/sf1`` — the drift classes invisible at fixture scale are
 float accumulation order (10x more addends per group), integer headroom
 (sums 10x larger), and candidate-generation cutoffs (DF caps, LSH bit
-ladders) that bind differently at bigger N. The compare is
-driver_sim.compare_frames — the same strict dtype-aware comparator the
-round gate uses.
+ladders) that bind differently at bigger N. Each key goes through the
+package's one oracle check, ``oracle.check_key`` — the same strict
+dtype-aware comparator tier-1, ``verify`` and driver_sim run.
 
     python tools/parity_sf1.py            # the pinned 20-key list at sf1
     python tools/parity_sf1.py key1 key2  # ad-hoc subset at sf1
@@ -24,14 +24,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb  # noqa: E402
 
-from driver_sim import TABLES, compare_frames  # noqa: E402
+from mapreduce_6_824_lab1_spark import ORACLES, TABLES  # noqa: E402
+from mapreduce_6_824_lab1_spark.oracle import (  # noqa: E402
+    check_key,
+    fixture_views,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = os.path.join(REPO, "scaled_data", "sf1")
@@ -164,8 +167,8 @@ def _union_find_labels(edges) -> dict[int, int]:
 
 # CC keys: oracle = union-find over the upstream graph's oracle edges
 # (recursive CTE blows up at sf1 — see _union_find_labels). Maps key ->
-# (edge SQL producing columns (a, b), output columns).
-def _cc_oracle_frame(duck, key):
+# (edge SQL, edge columns a and b, output id column).
+def _cc_oracle_frame(key, duck):
     import pandas as pd  # noqa: PLC0415
 
     from mapreduce_6_824_lab1_spark.operators.dedup import (  # noqa: PLC0415
@@ -191,6 +194,9 @@ def _cc_oracle_frame(duck, key):
     ).astype("int64")
 
 
+CC_KEYS = ("similarity_knn_clusters", "dedup_clusters")
+
+
 def main() -> None:
     args = sys.argv[1:]
     sf10 = args[:1] == ["--sf10"]
@@ -199,18 +205,12 @@ def main() -> None:
     sf_dir = SF10 if sf10 else SF1
     record = RECORD10 if sf10 else RECORD
 
-    from mapreduce_6_824_lab1_spark import ORACLES, QUERIES
     from mapreduce_6_824_lab1_spark.session import get_spark
 
     spark = get_spark(app_name="parity-sf1")
     spark.sparkContext.setLogLevel("ERROR")
 
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
+    duck = fixture_views(sf_dir)
     lines, fails = [], []
     for i, k in enumerate(keys):
         # stratum keys (sf10 only): both engines run the FULL key on the
@@ -218,52 +218,34 @@ def main() -> None:
         # quadratic per label by spec, so full-output sf10 parity is
         # genuinely intractable on BOTH sides; the stratum is an exact,
         # openly-partial check at sf10 content
-        strat = sf10 and k in STRATUM_KEYS
         k_dir, k_duck, note = sf_dir, duck, ""
-        if strat:
+        if sf10 and k in STRATUM_KEYS:
             k_dir = _stratum_dir()
-            k_duck = duckdb.connect()
-            for t in TABLES:
-                k_duck.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{k_dir}/{t}.parquet'"
-                )
+            k_duck = fixture_views(k_dir)
             note = f" (vec_id%{STRATUM_MOD}==0 stratum)"
-        t0 = time.time()
+        oracle = partial(_cc_oracle_frame, k) if k in CC_KEYS else None
         try:
-            sdf = QUERIES[k](spark, k_dir).toPandas()
+            c = check_key(spark, k, k_dir, k_duck, oracle)
         except Exception as ex:  # noqa: BLE001 — recorded, not raised
             fails.append(k)
-            lines.append(f"| {k} | SPARK ERROR | — | {ex} |")
-            print(f"[{i + 1}/{len(keys)}] {k}: SPARK ERROR {ex}", flush=True)
+            lines.append(f"| {k} | ERROR | — | {ex} |")
+            print(f"[{i + 1}/{len(keys)}] {k}: ERROR {ex}", flush=True)
             continue
-        t_spark = time.time() - t0
-        is_cc = k in ("similarity_knn_clusters", "dedup_clusters")
-        if k not in ORACLES and not is_cc:
-            lines.append(
-                f"| {k} | rows-only | {len(sdf)} rows | no oracle |"
-            )
-            print(f"[{i + 1}/{len(keys)}] {k}: rows-only {len(sdf)}", flush=True)
-            continue
-        t0 = time.time()
-        if is_cc:
-            odf = _cc_oracle_frame(k_duck, k)
-        else:
-            odf = k_duck.execute(ORACLES[k]).fetchdf()
-        t_duck = time.time() - t0
-        msg = compare_frames(sdf, odf)
-        if msg:
+        if c.failure:
             fails.append(k)
-            lines.append(f"| {k} | **FAIL**{note} | {len(sdf)} rows | {msg} |")
-            print(f"[{i + 1}/{len(keys)}] {k}: FAIL {msg}", flush=True)
+            lines.append(f"| {k} | **FAIL**{note} | {c.rows} rows | {c.failure} |")
+            print(f"[{i + 1}/{len(keys)}] {k}: FAIL {c.failure}", flush=True)
+        elif oracle is None and k not in ORACLES:
+            lines.append(f"| {k} | rows-only | {c.rows} rows | no oracle |")
+            print(f"[{i + 1}/{len(keys)}] {k}: rows-only {c.rows}", flush=True)
         else:
             lines.append(
-                f"| {k} | pass{note} | {len(sdf)} rows | spark "
-                f"{t_spark:.1f}s / duckdb {t_duck:.1f}s |"
+                f"| {k} | pass{note} | {c.rows} rows | spark "
+                f"{c.spark_s:.1f}s / duckdb {c.oracle_s:.1f}s |"
             )
             print(
-                f"[{i + 1}/{len(keys)}] {k}: ok{note} {len(sdf)} rows "
-                f"(spark {t_spark:.1f}s, duckdb {t_duck:.1f}s)",
+                f"[{i + 1}/{len(keys)}] {k}: ok{note} {c.rows} rows "
+                f"(spark {c.spark_s:.1f}s, duckdb {c.oracle_s:.1f}s)",
                 flush=True,
             )
 
@@ -281,7 +263,7 @@ def main() -> None:
             fh.write(
                 f"# {name} — oracle parity at {scale}\n\n"
                 f"Generated by `{cmd}`. Comparator: "
-                "driver_sim.compare_frames "
+                "oracle.compare_frames "
                 "(dtype-aware, order-insensitive, float atol 1e-6).\n\n"
                 f"Result: **{len(keys) - len(fails)}/{len(keys)} "
                 "hash-green**"

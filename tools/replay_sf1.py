@@ -42,11 +42,7 @@ import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF1 = os.path.join(REPO, "scaled_data", "sf1")
-SF10 = os.path.join(REPO, "scaled_data", "sf10")
-RECORD = os.path.join(REPO, "PARITY_SF1.md")
-RECORD10 = os.path.join(REPO, "PARITY_SF10.md")
+from tools.parity_sf1 import RECORD, RECORD10, SF1, SF10  # noqa: E402
 
 
 def _numpy_kmeans(sf_dir: str, k: int, iterations: int):
